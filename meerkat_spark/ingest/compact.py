@@ -59,7 +59,9 @@ def compact_partition(
     from meerkat_spark.ingest.neardup_maintenance import _sweep_stale_swaps
 
     _sweep_stale_swaps(part_dir)
-    df = spark.read.parquet(part_dir)
+    # mergeSchema, as read_table: without it Spark takes the schema of
+    # one arbitrary file and drops columns added by later appends
+    df = spark.read.option("mergeSchema", "true").parquet(part_dir)
     deduped = df.dropDuplicates([TS_COL, DEDUP_COL]).coalesce(target_files)
     tmp_dir = part_dir + f".compact-{uuid.uuid4().hex[:8]}"
     deduped.write.mode("overwrite").parquet(tmp_dir)

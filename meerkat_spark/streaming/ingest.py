@@ -13,15 +13,44 @@ Reference semantics → Spark realization (SURVEY.md §2.2.6):
   streaming land in one table).
 - `bin()`/session windows on live data → window()/session_window()
   aggregations with watermarks.
+
+The keeper streams (near-dup, MinHash, IVF, heavy hitters, weighted
+reservoir, HLL, t-digest) fold each micro-batch into persisted state.
+They share one writer (_start), one exactly-once guard (_once, which
+documents the replay protocol) and, for the merge-fold keepers, one
+immutable-epoch-dir fold (_fold_summary_epoch) and one pointer read
+(_read_latest).
 """
 
 from __future__ import annotations
+
+import hashlib
+import os
+import shutil
+from functools import partial
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from meerkat_spark.ingest.batch import DAY_COL, DEDUP_COL, TS_COL, _ensure_system_columns
+
+
+def _start(
+    stream_df: DataFrame, checkpoint: str, step, trigger_once: bool
+) -> StreamingQuery:
+    """Run `step(batch_df, epoch_id)` under foreachBatch. Micro-batches
+    run sequentially, so epoch N sees epoch N-1's state. `trigger_once`
+    catches up on what is available and stops; otherwise the stream
+    triggers every 5 seconds."""
+    writer = (
+        stream_df.writeStream.outputMode("append")
+        .option("checkpointLocation", checkpoint)
+        .foreachBatch(step)
+    )
+    if trigger_once:
+        return writer.trigger(availableNow=True).start()
+    return writer.trigger(processingTime="5 seconds").start()
 
 
 def start_stream_ingest(
@@ -47,16 +76,7 @@ def start_stream_ingest(
             .parquet(out_path)
         )
 
-    writer = (
-        deduped.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(_write_batch)
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime="5 seconds")
-    return writer.start()
+    return _start(deduped, checkpoint, _write_batch, trigger_once)
 
 
 def streaming_window_counts(
@@ -80,54 +100,134 @@ def streaming_window_counts(
     )
 
 
-def _epoch_marker(index_path: str, epoch_id: int, stream_id: str | None) -> str:
-    """Marker path for one applied epoch. epoch_ids are scoped to ONE
-    checkpoint, so the marker name carries a `stream_id` namespace
-    (the keeper steps derive it from the checkpoint path): re-pointing
-    a stream at a fresh checkpoint restarts epoch_ids at 0, and
-    without the namespace those would wrongly read as already
-    applied. Deleting a checkpoint IN PLACE still requires clearing
-    `<index>/_epochs/` (documented contract)."""
-    import os
-
-    ns = f"{stream_id}-" if stream_id else ""
-    return os.path.join(index_path, "_epochs", f"epoch-{ns}{int(epoch_id)}")
-
-
 def _stream_id_of(checkpoint: str) -> str:
-    import hashlib
-
     return hashlib.sha1(checkpoint.encode()).hexdigest()[:10]
 
 
-def _epoch_marker_guard(
-    index_path: str, epoch_id: int, stream_id: str | None = None
-) -> bool:
-    """Exactly-once guard for foreachBatch keeper steps: returns True
-    when `epoch_id` was already fully applied to the index at
-    `index_path` (skip the epoch). Structured Streaming's foreachBatch
-    is at-least-once — after a crash between the side effect and the
-    checkpoint commit the SAME epoch_id re-runs — so each completed
-    epoch drops a marker file under `<index>/_epochs/`. On an object
-    store, the open().close() becomes a conditional put; the local-FS
-    form matches this repo's storage layer. Mid-epoch crashes (side
-    effect half-applied, no marker) are healed row-wise by the ingest
-    jobs' indexed-id anti-join
-    (ingest/neardup_maintenance._skip_already_indexed)."""
-    import os
-
-    return os.path.exists(_epoch_marker(index_path, epoch_id, stream_id))
+def _ns(stream_id: str | None) -> str:
+    return f"{stream_id}-" if stream_id else ""
 
 
-def _commit_epoch_marker(
-    index_path: str, epoch_id: int, stream_id: str | None = None
-) -> None:
-    import os
+def _once(path: str, epoch_id: int, stream_id: str | None, apply) -> None:
+    """Apply one epoch to the keeper state at `path` exactly once.
 
-    marker = _epoch_marker(index_path, epoch_id, stream_id)
+    Structured Streaming's foreachBatch is at-least-once: after a crash
+    between a step's side effect and the checkpoint commit, the SAME
+    epoch_id is delivered again. So each completed epoch leaves a marker
+    `<path>/_epochs/epoch-<sid>-<n>`, written only after `apply()`
+    returns, and a redelivered epoch whose marker exists is skipped
+    wholesale. On an object store the marker write becomes a
+    conditional put.
+
+    `stream_id` (each front-end derives it from its checkpoint with
+    _stream_id_of) namespaces the markers: re-pointing a stream at a
+    fresh checkpoint restarts epoch ids at 0, and those must not read
+    as already applied. Deleting a checkpoint IN PLACE still requires
+    clearing `<path>/_epochs/`.
+
+    An epoch that crashed before its marker re-runs `apply()` in full,
+    so each keeper's `apply` converges from its own partial state:
+    - near-dup / MinHash: the ingest job's indexed-id anti-join
+      (ingest/neardup_maintenance._skip_already_indexed) turns
+      already-appended rows into no-ops;
+    - IVF: the re-extend leaves duplicate rows that the maintenance
+      cadence removes (ivf_ingest_step);
+    - merge-fold keepers: immutable epoch dirs (_fold_summary_epoch).
+    """
+    marker = os.path.join(path, "_epochs", f"epoch-{_ns(stream_id)}{int(epoch_id)}")
+    if os.path.exists(marker):
+        return
+    apply()
     os.makedirs(os.path.dirname(marker), exist_ok=True)
     with open(marker, "w"):
         pass
+
+
+def _read_latest(spark, path: str) -> tuple[str, DataFrame]:
+    """The summary dir the `_latest` pointer names, and a lazy frame
+    over it."""
+    with open(os.path.join(path, "_latest")) as f:
+        name = f.read().strip()
+    return name, spark.read.parquet(os.path.join(path, name))
+
+
+def _fold_summary_epoch(
+    batch_df: DataFrame,
+    epoch_id: int,
+    summary_path: str,
+    fold,
+    stream_id: str | None = None,
+) -> None:
+    """One epoch of a MERGE-FOLD keeper (heavy_hitters_step,
+    weighted_sample_step, hll_distinct_step, tdigest_step): persist
+    `fold(current, batch_df)`, where `current` is the state at the
+    `_latest` pointer (None before the first epoch), exactly once.
+
+    The state is a merge-sum, so the row-wise healing of the index
+    keepers cannot apply: re-folding a half-applied epoch would
+    double-count. Instead each epoch writes an IMMUTABLE dir
+    `summary-<sid>-<n>` (tmp + atomic rename), then moves the `_latest`
+    pointer to it (tmp + rename), then _once commits the `_epochs/`
+    marker. The fold always reads the pointer's dir, which only moves
+    once the new dir is complete, so a replay at any crash point
+    converges to the state of an uncrashed run:
+      - marker present          -> skipped wholesale;
+      - dir complete (marker    -> the dir is adopted: pointer and
+        lost or pointer behind)    marker commit, no re-fold;
+      - otherwise               -> recomputed from the unmoved pointer
+                                   target (folds are deterministic).
+
+    When the pointer moves, every `summary-*` dir except the previous
+    and the new pointer target is deleted. The previous target is the
+    reader grace window: the read_* functions hand out lazy frames over
+    the pointer's dir, and under a continuously triggered stream the
+    next fold would otherwise delete it while a consumer collects. A
+    held frame survives one fold; collect or cache it before holding it
+    across more (the state is sketch-sized). State on disk is at most
+    two epochs' summaries. Single writer per path, like the index
+    compactions.
+    """
+    name = f"summary-{_ns(stream_id)}{int(epoch_id)}"
+    pointer = os.path.join(summary_path, "_latest")
+
+    def apply() -> None:
+        os.makedirs(summary_path, exist_ok=True)
+        previous, current = (
+            _read_latest(batch_df.sparkSession, summary_path)
+            if os.path.isfile(pointer)
+            else (None, None)
+        )
+        target = os.path.join(summary_path, name)
+        if not os.path.isdir(target):
+            fold(current, batch_df).write.mode("overwrite").parquet(target + ".tmp")
+            os.replace(target + ".tmp", target)
+        if previous == name:
+            return
+        with open(pointer + ".tmp", "w") as f:
+            f.write(name)
+        os.replace(pointer + ".tmp", pointer)
+        for d in os.listdir(summary_path):
+            if d.startswith("summary-") and d not in (previous, name):
+                shutil.rmtree(os.path.join(summary_path, d), ignore_errors=True)
+
+    _once(summary_path, epoch_id, stream_id, apply)
+
+
+# ------------------------------------------- index keepers (row-wise heal)
+
+
+def _index_keeper_step(
+    ingest, batch_df, epoch_id, index_path, keepers_path, stream_id, **kwargs
+) -> None:
+    """The shared body of the near-dup and MinHash keeper steps."""
+
+    def apply() -> None:
+        if batch_df.head(1):
+            keepers, _pairs = ingest(batch_df, index_path, **kwargs)
+            if keepers_path:
+                keepers.write.mode("append").parquet(keepers_path)
+
+    _once(index_path, epoch_id, stream_id, apply)
 
 
 def neardup_keeper_step(
@@ -140,27 +240,19 @@ def neardup_keeper_step(
     keepers_path: str | None = None,
     stream_id: str | None = None,
 ) -> None:
-    """ONE idempotent foreachBatch epoch of the near-dup keeper loop —
-    module-level so the replay tests can drive it directly. Replay
-    safety is two-layer: a completed epoch is skipped wholesale by its
-    marker; a HALF-applied epoch re-runs but the ingest job's
-    indexed-id anti-join turns already-appended rows into no-ops.
-    `keepers_path` is a convenience log of per-epoch keepers; the
-    authoritative keeper set is the index's vectors table (a crash
-    between the index append and this log can under-record one epoch's
-    keepers in the log, never in the index)."""
-    if _epoch_marker_guard(index_path, epoch_id, stream_id):
-        return
+    """ONE idempotent foreachBatch epoch of the near-dup keeper loop
+    (ingest_neardup_batch) — module-level so the replay tests can drive
+    it directly. Replay protocol: _once. `keepers_path` is a convenience
+    log of per-epoch keepers; the authoritative keeper set is the
+    index's vectors table (a crash between the index append and this
+    log can under-record one epoch's keepers in the log, never in the
+    index)."""
     from meerkat_spark.ingest.neardup_maintenance import ingest_neardup_batch
 
-    if batch_df.head(1):
-        keepers, _pairs = ingest_neardup_batch(
-            batch_df, index_path, threshold=threshold,
-            id_col=id_col, vec_col=vec_col,
-        )
-        if keepers_path:
-            keepers.write.mode("append").parquet(keepers_path)
-    _commit_epoch_marker(index_path, epoch_id, stream_id)
+    _index_keeper_step(
+        ingest_neardup_batch, batch_df, epoch_id, index_path, keepers_path,
+        stream_id, threshold=threshold, id_col=id_col, vec_col=vec_col,
+    )
 
 
 def minhash_keeper_step(
@@ -176,21 +268,43 @@ def minhash_keeper_step(
 ) -> None:
     """Text twin of neardup_keeper_step: one idempotent foreachBatch
     epoch of the MinHash keeper loop over the incremental text index
-    (text/dedup_index.py). Same two-layer replay safety: epoch marker
-    for committed epochs, indexed-id anti-join inside
-    ingest_minhash_batch for half-applied ones."""
-    if _epoch_marker_guard(index_path, epoch_id, stream_id):
-        return
+    (text/dedup_index.py, ingest_minhash_batch). Replay protocol:
+    _once."""
     from meerkat_spark.ingest.neardup_maintenance import ingest_minhash_batch
 
-    if batch_df.head(1):
-        keepers, _pairs = ingest_minhash_batch(
-            batch_df, index_path, id_col=id_col, text_col=text_col,
-            verify_jaccard=verify_jaccard, corpus=corpus,
-        )
-        if keepers_path:
-            keepers.write.mode("append").parquet(keepers_path)
-    _commit_epoch_marker(index_path, epoch_id, stream_id)
+    _index_keeper_step(
+        ingest_minhash_batch, batch_df, epoch_id, index_path, keepers_path,
+        stream_id, id_col=id_col, text_col=text_col,
+        verify_jaccard=verify_jaccard, corpus=corpus,
+    )
+
+
+def start_neardup_ingest_stream(
+    stream_df: DataFrame,
+    index_path: str,
+    checkpoint: str,
+    threshold: float = 0.9,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    keepers_path: str | None = None,
+    trigger_once: bool = True,
+) -> StreamingQuery:
+    """Streaming front-end for the incremental embedding near-dup
+    KEEPER loop (ingest/neardup_maintenance.ingest_neardup_batch): each
+    micro-batch is deduped against the persisted sign-LSH index AND
+    itself, only the keepers' postings/vectors are appended, and
+    (optionally) the keepers land in a parquet table at `keepers_path`.
+    Semantics are EXACTLY the per-batch job's — streaming adds replay
+    machinery (_once), not new rules — which is what the batch-vs-stream
+    parity test pins (tests/test_streaming_parity.py). Sequential
+    micro-batches let batch N see batch N-1's postings. The index must
+    already exist (build_neardup_index seeds the params/planes)."""
+    step = partial(
+        neardup_keeper_step, index_path=index_path, threshold=threshold,
+        id_col=id_col, vec_col=vec_col, keepers_path=keepers_path,
+        stream_id=_stream_id_of(checkpoint),
+    )
+    return _start(stream_df, checkpoint, step, trigger_once)
 
 
 def start_minhash_ingest_stream(
@@ -203,335 +317,17 @@ def start_minhash_ingest_stream(
     trigger_once: bool = True,
 ) -> StreamingQuery:
     """Streaming front-end for the incremental MinHash TEXT keeper
-    loop — the document-corpus twin of start_neardup_ingest_stream
-    (ingest_minhash_batch under foreachBatch; micro-batches run
-    sequentially so batch N sees batch N-1's postings; idempotent
-    under epoch replay via `_epochs/` markers + the indexed-id
-    anti-join). The index must already exist (build_minhash_index).
-    The verify_jaccard mode needs a corpus side-input and is a
-    batch-job concern — the streaming path runs the default
-    high-recall band-collision keeper."""
-
-    sid = _stream_id_of(checkpoint)
-
-    def _step(batch_df: DataFrame, epoch_id: int) -> None:
-        minhash_keeper_step(
-            batch_df, epoch_id, index_path,
-            id_col=id_col, text_col=text_col, keepers_path=keepers_path,
-            stream_id=sid,
-        )
-
-    writer = (
-        stream_df.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(_step)
+    loop — the document-corpus twin of start_neardup_ingest_stream.
+    The index must already exist (build_minhash_index). The
+    verify_jaccard mode needs a corpus side-input and is a batch-job
+    concern — the streaming path runs the default high-recall
+    band-collision keeper."""
+    step = partial(
+        minhash_keeper_step, index_path=index_path, id_col=id_col,
+        text_col=text_col, keepers_path=keepers_path,
+        stream_id=_stream_id_of(checkpoint),
     )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime="5 seconds")
-    return writer.start()
-
-
-def weighted_sample_step(
-    batch_df: DataFrame,
-    epoch_id: int,
-    sample_path: str,
-    weight_col: str,
-    n: int,
-    id_col: str,
-    salt: str = "s1",
-    stream_id: str | None = None,
-    retain_epochs: int = 2,
-) -> None:
-    """ONE idempotent foreachBatch epoch of a streaming weighted
-    reservoir (r14): fold the batch's Efraimidis-Spirakis summary
-    (operators/sampling.weighted_sample_summary) into the persisted
-    n-row sample with merge_weighted_samples — the race keys are
-    deterministic per (id, weight, salt), so min-n of the stored
-    summary and the batch summary IS the draw over everything ingested
-    since the sample was born; after any number of epochs the stored
-    sample is bit-identical to one global weighted_sample_n pass over
-    the concatenated stream (batch/stream parity pinned in
-    tests/test_streaming_parity.py). State is <= n rows per retained
-    epoch. Crash/replay protocol and sweep grace window are the shared
-    immutable-epoch-dir machinery of heavy_hitters_step
-    (_fold_summary_epoch) — merge-folds cannot heal row-wise, so
-    epochs are immutable dirs behind a `_latest` pointer and the
-    `_epochs/` marker commits last."""
-    if _epoch_marker_guard(sample_path, epoch_id, stream_id):
-        return
-    from meerkat_spark.operators.sampling import (
-        merge_weighted_samples,
-        weighted_sample_summary,
-    )
-
-    def fold(current, batch):
-        batch_summary = weighted_sample_summary(
-            batch, weight_col=weight_col, n=n, id_col=id_col, salt=salt
-        )
-        return merge_weighted_samples(
-            [current, batch_summary] if current is not None
-            else [batch_summary],
-            n=n, id_col=id_col,
-        )
-
-    _fold_summary_epoch(
-        batch_df, epoch_id, sample_path, fold,
-        stream_id=stream_id, retain_epochs=retain_epochs,
-    )
-    _commit_epoch_marker(sample_path, epoch_id, stream_id)
-
-
-def hll_distinct_step(
-    batch_df: DataFrame,
-    epoch_id: int,
-    sketch_path: str,
-    value_col: str,
-    by: list[str] | None = None,
-    lg_k: int = 12,
-    stream_id: str | None = None,
-    retain_epochs: int = 2,
-) -> None:
-    """ONE idempotent foreachBatch epoch of streaming distinct counts
-    (r14): fold the batch's per-group Datasketches HLL sketches into
-    the persisted sketch table via hll_union — HLL registers merge by
-    max, so the folded sketch equals one batch hll_sketch_agg over
-    everything ingested since the table was born (batch/stream parity
-    pinned in tests/test_streaming_parity.py). State is one
-    O(2^lg_k)-byte sketch row per observed group, independent of
-    stream volume — the streaming twin of the dcount/hll aggregate
-    family (functions/agg.py). The crash/replay protocol is the
-    shared immutable-epoch-dir machinery (_fold_summary_epoch);
-    read the running estimates with read_hll_distinct."""
-    if _epoch_marker_guard(sketch_path, epoch_id, stream_id):
-        return
-    keys = list(by or [])
-
-    def fold(current, batch):
-        batch_sk = batch.groupBy(*keys).agg(
-            F.hll_sketch_agg(F.col(value_col), F.lit(lg_k)).alias("__hll")
-        )
-        if current is None:
-            return batch_sk
-        # sketch-sized full-outer merge: one row per group on each
-        # side, unioned registers where both sides saw the group
-        both = current.unionByName(batch_sk)
-        if keys:
-            return both.groupBy(*keys).agg(
-                F.hll_union_agg(F.col("__hll")).alias("__hll")
-            )
-        return both.agg(F.hll_union_agg(F.col("__hll")).alias("__hll"))
-
-    _fold_summary_epoch(
-        batch_df, epoch_id, sketch_path, fold,
-        stream_id=stream_id, retain_epochs=retain_epochs,
-    )
-    _commit_epoch_marker(sketch_path, epoch_id, stream_id)
-
-
-def tdigest_step(
-    batch_df: DataFrame,
-    epoch_id: int,
-    digest_path: str,
-    value_col: str,
-    by: list[str],
-    compression: float = 100.0,
-    stream_id: str | None = None,
-    retain_epochs: int = 2,
-) -> None:
-    """ONE idempotent foreachBatch epoch of streaming per-group
-    percentiles (r14): build the batch's per-key t-digest table
-    (functions/tdigest.tdigest_sketch — map-side combine, digest-sized
-    shuffle) and fold it into the persisted table with
-    merge_digest_tables — the t-digest merge is its build on
-    concatenated centroid sets, so the k1 size bound and the pinned
-    rank-error contract hold over EVERYTHING ingested since the table
-    was born. Unlike the reservoir/HLL folds the merged digest is not
-    bit-identical to a one-pass build (compression of compressed
-    centroids takes a different centroid path), but estimates agree
-    within the documented rank error — the batch/stream parity test
-    pins both that tolerance and exact replay determinism. State is
-    one O(compression) digest row per key per retained epoch; read
-    with read_tdigest / functions.tdigest.digest_percentiles."""
-    if _epoch_marker_guard(digest_path, epoch_id, stream_id):
-        return
-    from meerkat_spark.functions.tdigest import (
-        merge_digest_tables,
-        tdigest_sketch,
-    )
-
-    def fold(current, batch):
-        batch_sk = tdigest_sketch(
-            batch, value_col, by=by, compression=compression
-        )
-        if current is None:
-            return batch_sk
-        return merge_digest_tables(
-            current.unionByName(batch_sk), by=by, compression=compression
-        )
-
-    _fold_summary_epoch(
-        batch_df, epoch_id, digest_path, fold,
-        stream_id=stream_id, retain_epochs=retain_epochs,
-    )
-    _commit_epoch_marker(digest_path, epoch_id, stream_id)
-
-
-def read_tdigest(spark, digest_path: str) -> DataFrame:
-    """The persisted streaming digest table (by…, digest) at its
-    latest committed epoch — feed it to digest_percentiles /
-    digest_percentrank. Lazy over the epoch dir; the retain_epochs
-    reader grace window applies."""
-    import os
-
-    pointer = os.path.join(digest_path, "_latest")
-    with open(pointer) as f:
-        return spark.read.parquet(
-            os.path.join(digest_path, f.read().strip())
-        )
-
-
-def start_tdigest_stream(
-    stream_df: DataFrame,
-    digest_path: str,
-    checkpoint: str,
-    value_col: str,
-    by: list[str],
-    compression: float = 100.0,
-    trigger_once: bool = True,
-    retain_epochs: int = 2,
-) -> StreamingQuery:
-    """Streaming front-end for per-group running percentiles: each
-    micro-batch's t-digests fold into the persisted table under
-    foreachBatch (sequential epochs), idempotent under at-least-once
-    replay via the shared immutable-epoch-dir + pointer protocol —
-    the streaming twin of the stored-digest rollup
-    (functions/tdigest.py)."""
-    sid = _stream_id_of(checkpoint)
-
-    def _step(batch_df: DataFrame, epoch_id: int) -> None:
-        tdigest_step(
-            batch_df, epoch_id, digest_path, value_col=value_col,
-            by=by, compression=compression, stream_id=sid,
-            retain_epochs=retain_epochs,
-        )
-
-    writer = (
-        stream_df.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(_step)
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime="5 seconds")
-    return writer.start()
-
-
-def read_hll_distinct(spark, sketch_path: str) -> DataFrame:
-    """The persisted streaming distinct-count table at its latest
-    committed epoch: the group columns plus `distinct_estimate` (the
-    HLL estimate; the raw sketch column is internal). Lazy over the
-    epoch dir — the retain_epochs reader grace window applies."""
-    import os
-
-    pointer = os.path.join(sketch_path, "_latest")
-    with open(pointer) as f:
-        df = spark.read.parquet(os.path.join(sketch_path, f.read().strip()))
-    return df.select(
-        *[c for c in df.columns if c != "__hll"],
-        F.hll_sketch_estimate(F.col("__hll")).alias("distinct_estimate"),
-    )
-
-
-def start_hll_distinct_stream(
-    stream_df: DataFrame,
-    sketch_path: str,
-    checkpoint: str,
-    value_col: str,
-    by: list[str] | None = None,
-    lg_k: int = 12,
-    trigger_once: bool = True,
-    retain_epochs: int = 2,
-) -> StreamingQuery:
-    """Streaming front-end for per-group distinct counting: each
-    micro-batch folds its HLL sketches into the persisted table under
-    foreachBatch (sequential epochs), idempotent under at-least-once
-    replay via the shared immutable-epoch-dir + pointer protocol. The
-    estimates always equal a batch hll/dcount aggregate over
-    everything ingested so far — streaming adds replay machinery, not
-    new semantics."""
-    sid = _stream_id_of(checkpoint)
-
-    def _step(batch_df: DataFrame, epoch_id: int) -> None:
-        hll_distinct_step(
-            batch_df, epoch_id, sketch_path, value_col=value_col,
-            by=by, lg_k=lg_k, stream_id=sid,
-            retain_epochs=retain_epochs,
-        )
-
-    writer = (
-        stream_df.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(_step)
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime="5 seconds")
-    return writer.start()
-
-
-def read_weighted_sample(spark, sample_path: str) -> DataFrame:
-    """The persisted streaming weighted sample at its latest committed
-    epoch, with the internal `__es_key` race-key column dropped. Lazy
-    over the epoch dir — the same retain_epochs reader grace window as
-    read_heavy_hitters_summary applies."""
-    import os
-
-    pointer = os.path.join(sample_path, "_latest")
-    with open(pointer) as f:
-        df = spark.read.parquet(os.path.join(sample_path, f.read().strip()))
-    return df.drop("__es_key")
-
-
-def start_weighted_sample_stream(
-    stream_df: DataFrame,
-    sample_path: str,
-    checkpoint: str,
-    weight_col: str,
-    n: int,
-    id_col: str,
-    salt: str = "s1",
-    trigger_once: bool = True,
-    retain_epochs: int = 2,
-) -> StreamingQuery:
-    """Streaming front-end for the weighted reservoir: each micro-batch
-    folds into the persisted n-row sample under foreachBatch
-    (sequential epochs), idempotent under at-least-once replay via the
-    shared immutable-epoch-dir + pointer protocol. Read the current
-    draw any time with read_weighted_sample — it always equals the
-    global weighted_sample_n over everything ingested so far."""
-    sid = _stream_id_of(checkpoint)
-
-    def _step(batch_df: DataFrame, epoch_id: int) -> None:
-        weighted_sample_step(
-            batch_df, epoch_id, sample_path, weight_col=weight_col,
-            n=n, id_col=id_col, salt=salt, stream_id=sid,
-            retain_epochs=retain_epochs,
-        )
-
-    writer = (
-        stream_df.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(_step)
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime="5 seconds")
-    return writer.start()
+    return _start(stream_df, checkpoint, step, trigger_once)
 
 
 def ivf_ingest_step(
@@ -549,47 +345,43 @@ def ivf_ingest_step(
     extend with the frozen build routing, then every `maintain_every`
     epochs run maintain_ivf_index (compacts small-file/duplicate debt;
     a 'rebuild' diagnosis is only reported unless `allow_rebuild`).
-    Replay safety differs from the keeper loops: extend has NO per-row
-    anti-join (it would scan the full id column per batch), so a
-    HALF-applied epoch's re-run leaves duplicate rows — which the
-    periodic maintenance pass detects (n_duplicate_rows) and heals
-    exactly. Complete epochs are skipped wholesale by their marker.
     `maintain_kwargs` passes threshold overrides through to
     maintain_ivf_index (files_per_cell_compact, skew_rebuild_ratio).
 
-    `allow_rebuild=True` (r14, VERDICT r13 ask #7) opts the in-stream
-    cadence into the full drift loop: a 'rebuild' diagnosis re-trains
-    the routing via rebuild_ivf_index's atomic `.rebuild-<uuid>` tmp +
-    `.old-<uuid>` swap. Crash protocol — the epoch marker commits only
-    AFTER maintenance, so a crash at ANY point of an in-stream rebuild
-    replays the whole epoch, and the step's entry sweep
-    (_sweep_stale_swaps on the index root) restores the live index
-    first when the crash landed between the two swap renames (the
-    `.old-*` residue is then the only copy); rebuild's own entry sweep
-    reclaims orphaned `.rebuild-*` trains. The replayed extend leaves
-    byte-identical duplicate rows under the frozen routing, which the
-    re-run rebuild (or compact) dedups inherently — so a replayed
-    epoch converges to the same index as an uncrashed run
+    Replay (see _once): extend has NO per-row anti-join (it would scan
+    the full id column per batch), so a HALF-applied epoch's re-run
+    leaves duplicate rows — byte-identical under the frozen routing —
+    which the periodic maintenance pass detects (n_duplicate_rows) and
+    heals exactly.
+
+    `allow_rebuild=True` (r14) opts the in-stream cadence into the full
+    drift loop: a 'rebuild' diagnosis re-trains the routing via
+    rebuild_ivf_index's atomic `.rebuild-<uuid>` tmp + `.old-<uuid>`
+    swap. The marker commits only AFTER maintenance, so a crash at ANY
+    point of an in-stream rebuild replays the whole epoch; the step's
+    entry sweep (_sweep_stale_swaps on the index root) first restores
+    the live index when the crash landed between the two swap renames
+    (the `.old-*` residue is then the only copy), and rebuild's own
+    entry sweep reclaims orphaned `.rebuild-*` trains. A replayed epoch
+    converges to the same index as an uncrashed run
     (tests/test_replay_idempotence.py pins all three crash states)."""
-    maintain_kwargs = dict(maintain_kwargs or {})
-    maintain_kwargs.setdefault("allow_rebuild", allow_rebuild)
-    if _epoch_marker_guard(index_path, epoch_id, stream_id):
-        return
     from meerkat_spark.ingest.neardup_maintenance import _sweep_stale_swaps
     from meerkat_spark.similarity.ivf_index import (
         extend_ivf_index,
         maintain_ivf_index,
     )
 
-    # root-level crash recovery BEFORE touching the index: a prior
-    # in-stream rebuild that died between its renames left no live dir
-    # (only `.old-*`); restore it, and reclaim redundant residue
-    _sweep_stale_swaps(index_path.rstrip("/"))
-    if batch_df.head(1):
-        extend_ivf_index(batch_df, index_path, id_col=id_col, vec_col=vec_col)
-    if maintain_every and int(epoch_id) % int(maintain_every) == 0:
-        maintain_ivf_index(batch_df.sparkSession, index_path, **maintain_kwargs)
-    _commit_epoch_marker(index_path, epoch_id, stream_id)
+    maintain_kwargs = dict(maintain_kwargs or {})
+    maintain_kwargs.setdefault("allow_rebuild", allow_rebuild)
+
+    def apply() -> None:
+        _sweep_stale_swaps(index_path.rstrip("/"))
+        if batch_df.head(1):
+            extend_ivf_index(batch_df, index_path, id_col=id_col, vec_col=vec_col)
+        if maintain_every and int(epoch_id) % int(maintain_every) == 0:
+            maintain_ivf_index(batch_df.sparkSession, index_path, **maintain_kwargs)
+
+    _once(index_path, epoch_id, stream_id, apply)
 
 
 def start_ivf_ingest_stream(
@@ -617,78 +409,16 @@ def start_ivf_ingest_stream(
     crash-replay protocol documented on ivf_ingest_step. Re-training
     moves cell boundaries (near-boundary approximate results may
     change mid-stream), which is why it stays opt-in."""
-    sid = _stream_id_of(checkpoint)
-
-    def _step(batch_df: DataFrame, epoch_id: int) -> None:
-        ivf_ingest_step(
-            batch_df, epoch_id, index_path,
-            id_col=id_col, vec_col=vec_col,
-            maintain_every=maintain_every, stream_id=sid,
-            maintain_kwargs=maintain_kwargs,
-            allow_rebuild=allow_rebuild,
-        )
-
-    writer = (
-        stream_df.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(_step)
+    step = partial(
+        ivf_ingest_step, index_path=index_path, id_col=id_col,
+        vec_col=vec_col, maintain_every=maintain_every,
+        stream_id=_stream_id_of(checkpoint),
+        maintain_kwargs=maintain_kwargs, allow_rebuild=allow_rebuild,
     )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime="5 seconds")
-    return writer.start()
+    return _start(stream_df, checkpoint, step, trigger_once)
 
 
-def start_neardup_ingest_stream(
-    stream_df: DataFrame,
-    index_path: str,
-    checkpoint: str,
-    threshold: float = 0.9,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    keepers_path: str | None = None,
-    trigger_once: bool = True,
-) -> StreamingQuery:
-    """Streaming front-end for the incremental embedding near-dup
-    KEEPER loop (ingest/neardup_maintenance.ingest_neardup_batch): each
-    micro-batch is deduped against the persisted sign-LSH index AND
-    itself, only the keepers' postings/vectors are appended, and
-    (optionally) the keepers land in a parquet table at `keepers_path`.
-    Semantics are EXACTLY the per-batch job's — streaming adds replay
-    machinery, not new rules — which is what the batch-vs-stream parity
-    test pins (tests/test_streaming_parity.py drives the same packaged
-    step under foreachBatch).
-
-    IDEMPOTENT under at-least-once epoch replay (r12): each completed
-    epoch commits a marker under `<index>/_epochs/` and is skipped on
-    re-delivery; half-applied epochs heal through the ingest job's
-    indexed-id anti-join (see neardup_keeper_step).
-
-    Micro-batches run the keeper step SEQUENTIALLY (Structured
-    Streaming's foreachBatch guarantee), which the index append
-    requires: batch N must see batch N-1's postings. The index must
-    already exist (build_neardup_index seeds the params/planes)."""
-
-    sid = _stream_id_of(checkpoint)
-
-    def _step(batch_df: DataFrame, epoch_id: int) -> None:
-        neardup_keeper_step(
-            batch_df, epoch_id, index_path, threshold=threshold,
-            id_col=id_col, vec_col=vec_col, keepers_path=keepers_path,
-            stream_id=sid,
-        )
-
-    writer = (
-        stream_df.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(_step)
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime="5 seconds")
-    return writer.start()
+# --------------------------------------------------------- merge-fold keepers
 
 
 def heavy_hitters_step(
@@ -699,44 +429,18 @@ def heavy_hitters_step(
     capacity: int = 4096,
     weight_col: str | None = None,
     stream_id: str | None = None,
-    retain_epochs: int = 2,
 ) -> None:
     """ONE idempotent foreachBatch epoch of streaming heavy hitters:
-    Misra-Gries-summarize the batch (operators/sketches.py), merge it
-    into the persisted summary with the mergeable-summaries merge, and
-    swap the result in atomically. The stored state is sketch-sized —
-    <= capacity keys (+ the error sentinel) from the FIRST epoch on:
-    the raw per-partition summary can hold up to capacity x partitions
-    keys, so every epoch (including the first) is re-evicted through
-    merge_mg_summaries before persisting (ADVICE r13). The MG bounds
-    (est <= true <= est + err, err <= N_total/(capacity+1) per fold,
-    summed across folds) hold over EVERYTHING ingested since the
-    summary was born.
-
-    Replay protocol — summaries are merge-SUMS, so the keeper loops'
-    row-wise anti-join healing cannot apply (re-merging a half-applied
-    epoch would double-count). Instead every epoch writes an IMMUTABLE
-    result dir `summary-<sid>-<epoch>` (tmp + atomic rename), then
-    advances the `_latest` pointer (tmp + rename), then commits the
-    `_epochs/` marker. The merge always reads the POINTER's summary,
-    which only advances after the new dir is complete, so a replay at
-    ANY crash point recomputes (or re-discovers) byte-identical state:
-      - marker present          -> skip wholesale;
-      - result dir present      -> epoch's merge already finished:
-                                   advance pointer + marker only;
-      - otherwise               -> recompute from the unchanged
-                                   pointer target (deterministic).
-    Superseded epoch dirs are swept once the pointer has moved past
-    them — but the newest `retain_epochs` dirs are RETAINED as a
-    reader grace window (ADVICE r13): read_heavy_hitters_summary hands
-    out a lazy frame over the pointer's dir, and with a continuously
-    triggered stream the next fold would otherwise delete it under a
-    consumer mid-collect. Retaining N=2 gives every reader one full
-    epoch of grace; state stays O(capacity x retain_epochs) rows.
-    Single-writer-per-summary-path, like the index compactions.
-    """
-    if _epoch_marker_guard(summary_path, epoch_id, stream_id):
-        return
+    Misra-Gries-summarize the batch (operators/sketches.py) and merge it
+    into the persisted summary with the mergeable-summaries merge. The
+    stored state is sketch-sized — <= capacity keys (+ the error
+    sentinel) from the FIRST epoch on: the raw per-partition summary
+    can hold up to capacity x partitions keys, so every epoch
+    (including the first) is re-evicted through merge_mg_summaries
+    before persisting (ADVICE r13). The MG bounds (est <= true <= est +
+    err, err <= N_total/(capacity+1) per fold, summed across folds)
+    hold over EVERYTHING ingested since the summary was born. Replay
+    protocol and reader grace window: _fold_summary_epoch."""
     from meerkat_spark.operators.sketches import (
         merge_mg_summaries,
         misra_gries_summary,
@@ -747,11 +451,10 @@ def heavy_hitters_step(
         # the NULL-key error sentinel, so a batch whose counters all
         # evicted still contributes its error mass to later merges
         # (read_heavy_hitters_summary filters the sentinel for
-        # consumers). ALWAYS merge — even the first epoch: the raw
-        # summary holds up to capacity x partitions keys; the
-        # single-input merge re-evicts it to <= capacity (+ sentinel),
-        # so the persisted state is sketch-sized from birth
-        # (ADVICE r13)
+        # consumers). ALWAYS merge — even the first epoch: the
+        # single-input merge re-evicts the raw summary to <= capacity
+        # (+ sentinel), so the persisted state is sketch-sized from
+        # birth (ADVICE r13)
         batch_summary = misra_gries_summary(
             batch, key_col, capacity=capacity, weight_col=weight_col,
             keep_total_row=True,
@@ -762,103 +465,16 @@ def heavy_hitters_step(
             key_col, capacity=capacity, keep_total_row=True,
         )
 
-    _fold_summary_epoch(
-        batch_df, epoch_id, summary_path, fold,
-        stream_id=stream_id, retain_epochs=retain_epochs,
-    )
-    _commit_epoch_marker(summary_path, epoch_id, stream_id)
-
-
-def _fold_summary_epoch(
-    batch_df: DataFrame,
-    epoch_id: int,
-    summary_path: str,
-    fold,
-    stream_id: str | None = None,
-    retain_epochs: int = 2,
-) -> None:
-    """The shared immutable-epoch-dir replay machinery for MERGE-FOLD
-    keepers whose state cannot heal row-wise (heavy_hitters_step,
-    weighted_sample_step): write `fold(current_summary_or_None,
-    batch_df)` into an immutable `summary-<sid>-<epoch>` dir
-    (tmp + atomic rename), advance the `_latest` pointer, sweep
-    superseded dirs retaining the newest `retain_epochs` as the reader
-    grace window. The caller guards/commits the `_epochs/` marker
-    around this, so the crash-state contract is exactly
-    heavy_hitters_step's documented one."""
-    import os
-    import re
-    import shutil
-
-    spark = batch_df.sparkSession
-    ns = f"{stream_id}-" if stream_id else ""
-    target = os.path.join(summary_path, f"summary-{ns}{int(epoch_id)}")
-    pointer = os.path.join(summary_path, "_latest")
-    os.makedirs(summary_path, exist_ok=True)
-
-    if not os.path.isdir(target):
-        current = None
-        if os.path.isfile(pointer):
-            with open(pointer) as f:
-                cur_dir = os.path.join(summary_path, f.read().strip())
-            if os.path.isdir(cur_dir):
-                current = spark.read.parquet(cur_dir)
-        merged = fold(current, batch_df)
-        tmp_dir = target + ".tmp"
-        merged.write.mode("overwrite").parquet(tmp_dir)
-        os.replace(tmp_dir, target)
-
-    # advance the pointer (tmp + atomic rename)
-    tmp = pointer + ".tmp"
-    with open(tmp, "w") as f:
-        f.write(os.path.basename(target))
-    os.replace(tmp, pointer)
-
-    # sweep superseded dirs; retain the newest retain_epochs by epoch
-    # number so a lazy frame handed out against the previous pointer
-    # target survives this fold's sweep
-    keep = {os.path.basename(target)}
-    if os.path.isfile(pointer):
-        with open(pointer) as f:
-            keep.add(f.read().strip())
-
-    def _epoch_of(d: str) -> int:
-        m = re.search(r"-(\d+)$", d)
-        return int(m.group(1)) if m else -1
-
-    dirs = sorted(
-        (
-            d
-            for d in os.listdir(summary_path)
-            if d.startswith("summary-") and not d.endswith(".tmp")
-        ),
-        key=_epoch_of,
-    )
-    keep.update(dirs[-max(1, retain_epochs):])
-    for d in dirs:
-        if d not in keep:
-            shutil.rmtree(os.path.join(summary_path, d), ignore_errors=True)
+    _fold_summary_epoch(batch_df, epoch_id, summary_path, fold, stream_id)
 
 
 def read_heavy_hitters_summary(spark, summary_path: str) -> DataFrame:
     """The persisted streaming summary (key, est_count,
     count_error_max) at its latest committed epoch. The stored NULL-key
     error-sentinel row (see heavy_hitters_step) is filtered out — it is
-    merge plumbing, not a key.
-
-    The frame is LAZY over the epoch dir; the keeper's sweep retains
-    the newest `retain_epochs` (default 2) dirs, so against a
-    continuously triggered stream a reader has one full epoch of grace
-    to collect it. A consumer that holds the frame across MANY folds
-    should collect() or cache it promptly (it is sketch-sized —
-    <= capacity rows)."""
-    import os
-
-    pointer = os.path.join(summary_path, "_latest")
-    with open(pointer) as f:
-        df = spark.read.parquet(
-            os.path.join(summary_path, f.read().strip())
-        )
+    merge plumbing, not a key. Lazy over the epoch dir: the grace
+    window of _fold_summary_epoch applies."""
+    df = _read_latest(spark, summary_path)[1]
     return df.filter(F.col(df.columns[0]).isNotNull())
 
 
@@ -870,33 +486,228 @@ def start_heavy_hitters_stream(
     capacity: int = 4096,
     weight_col: str | None = None,
     trigger_once: bool = True,
-    retain_epochs: int = 2,
 ) -> StreamingQuery:
     """Streaming front-end for the Misra-Gries heavy-hitter summary:
-    each micro-batch folds into the persisted sketch under foreachBatch
-    (sequential epochs), idempotent under at-least-once replay via the
-    immutable-epoch-dir + pointer protocol in heavy_hitters_step.
-    State stays <= capacity keys (+ error sentinel) per retained epoch
-    regardless of stream volume — `retain_epochs` dirs are kept as the
-    reader grace window; read the running top-k any time with
+    each micro-batch folds into the persisted sketch (heavy_hitters_step).
+    State stays <= capacity keys (+ error sentinel) per kept epoch dir
+    regardless of stream volume; read the running top-k any time with
     read_heavy_hitters_summary."""
+    step = partial(
+        heavy_hitters_step, summary_path=summary_path, key_col=key_col,
+        capacity=capacity, weight_col=weight_col,
+        stream_id=_stream_id_of(checkpoint),
+    )
+    return _start(stream_df, checkpoint, step, trigger_once)
 
-    sid = _stream_id_of(checkpoint)
 
-    def _step(batch_df: DataFrame, epoch_id: int) -> None:
-        heavy_hitters_step(
-            batch_df, epoch_id, summary_path, key_col,
-            capacity=capacity, weight_col=weight_col, stream_id=sid,
-            retain_epochs=retain_epochs,
+def weighted_sample_step(
+    batch_df: DataFrame,
+    epoch_id: int,
+    sample_path: str,
+    weight_col: str,
+    n: int,
+    id_col: str,
+    salt: str = "s1",
+    stream_id: str | None = None,
+) -> None:
+    """ONE idempotent foreachBatch epoch of a streaming weighted
+    reservoir (r14): fold the batch's Efraimidis-Spirakis summary
+    (operators/sampling.weighted_sample_summary) into the persisted
+    n-row sample with merge_weighted_samples — the race keys are
+    deterministic per (id, weight, salt), so min-n of the stored
+    summary and the batch summary IS the draw over everything ingested
+    since the sample was born; after any number of epochs the stored
+    sample is bit-identical to one global weighted_sample_n pass over
+    the concatenated stream (batch/stream parity pinned in
+    tests/test_streaming_parity.py). State is <= n rows per kept epoch
+    dir. Replay protocol: _fold_summary_epoch."""
+    from meerkat_spark.operators.sampling import (
+        merge_weighted_samples,
+        weighted_sample_summary,
+    )
+
+    def fold(current, batch):
+        batch_summary = weighted_sample_summary(
+            batch, weight_col=weight_col, n=n, id_col=id_col, salt=salt
+        )
+        return merge_weighted_samples(
+            [current, batch_summary] if current is not None
+            else [batch_summary],
+            n=n, id_col=id_col,
         )
 
-    writer = (
-        stream_df.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(_step)
+    _fold_summary_epoch(batch_df, epoch_id, sample_path, fold, stream_id)
+
+
+def read_weighted_sample(spark, sample_path: str) -> DataFrame:
+    """The persisted streaming weighted sample at its latest committed
+    epoch, with the internal `__es_key` race-key column dropped. Lazy
+    over the epoch dir: the grace window of _fold_summary_epoch
+    applies."""
+    return _read_latest(spark, sample_path)[1].drop("__es_key")
+
+
+def start_weighted_sample_stream(
+    stream_df: DataFrame,
+    sample_path: str,
+    checkpoint: str,
+    weight_col: str,
+    n: int,
+    id_col: str,
+    salt: str = "s1",
+    trigger_once: bool = True,
+) -> StreamingQuery:
+    """Streaming front-end for the weighted reservoir: each micro-batch
+    folds into the persisted n-row sample (weighted_sample_step). Read
+    the current draw any time with read_weighted_sample — it always
+    equals the global weighted_sample_n over everything ingested so
+    far."""
+    step = partial(
+        weighted_sample_step, sample_path=sample_path,
+        weight_col=weight_col, n=n, id_col=id_col, salt=salt,
+        stream_id=_stream_id_of(checkpoint),
     )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime="5 seconds")
-    return writer.start()
+    return _start(stream_df, checkpoint, step, trigger_once)
+
+
+def hll_distinct_step(
+    batch_df: DataFrame,
+    epoch_id: int,
+    sketch_path: str,
+    value_col: str,
+    by: list[str] | None = None,
+    lg_k: int = 12,
+    stream_id: str | None = None,
+) -> None:
+    """ONE idempotent foreachBatch epoch of streaming distinct counts
+    (r14): fold the batch's per-group Datasketches HLL sketches into
+    the persisted sketch table via hll_union — HLL registers merge by
+    max, so the folded sketch equals one batch hll_sketch_agg over
+    everything ingested since the table was born (batch/stream parity
+    pinned in tests/test_streaming_parity.py). State is one
+    O(2^lg_k)-byte sketch row per observed group, independent of
+    stream volume — the streaming twin of the dcount/hll aggregate
+    family (functions/agg.py). Replay protocol: _fold_summary_epoch;
+    read the running estimates with read_hll_distinct."""
+    keys = list(by or [])
+
+    def fold(current, batch):
+        batch_sk = batch.groupBy(*keys).agg(
+            F.hll_sketch_agg(F.col(value_col), F.lit(lg_k)).alias("__hll")
+        )
+        if current is None:
+            return batch_sk
+        # sketch-sized full-outer merge: one row per group on each
+        # side, unioned registers where both sides saw the group
+        both = current.unionByName(batch_sk)
+        if keys:
+            return both.groupBy(*keys).agg(
+                F.hll_union_agg(F.col("__hll")).alias("__hll")
+            )
+        return both.agg(F.hll_union_agg(F.col("__hll")).alias("__hll"))
+
+    _fold_summary_epoch(batch_df, epoch_id, sketch_path, fold, stream_id)
+
+
+def read_hll_distinct(spark, sketch_path: str) -> DataFrame:
+    """The persisted streaming distinct-count table at its latest
+    committed epoch: the group columns plus `distinct_estimate` (the
+    HLL estimate; the raw sketch column is internal). Lazy over the
+    epoch dir: the grace window of _fold_summary_epoch applies."""
+    df = _read_latest(spark, sketch_path)[1]
+    return df.select(
+        *[c for c in df.columns if c != "__hll"],
+        F.hll_sketch_estimate(F.col("__hll")).alias("distinct_estimate"),
+    )
+
+
+def start_hll_distinct_stream(
+    stream_df: DataFrame,
+    sketch_path: str,
+    checkpoint: str,
+    value_col: str,
+    by: list[str] | None = None,
+    lg_k: int = 12,
+    trigger_once: bool = True,
+) -> StreamingQuery:
+    """Streaming front-end for per-group distinct counting: each
+    micro-batch folds its HLL sketches into the persisted table
+    (hll_distinct_step). The estimates always equal a batch hll/dcount
+    aggregate over everything ingested so far — streaming adds replay
+    machinery, not new semantics."""
+    step = partial(
+        hll_distinct_step, sketch_path=sketch_path, value_col=value_col,
+        by=by, lg_k=lg_k, stream_id=_stream_id_of(checkpoint),
+    )
+    return _start(stream_df, checkpoint, step, trigger_once)
+
+
+def tdigest_step(
+    batch_df: DataFrame,
+    epoch_id: int,
+    digest_path: str,
+    value_col: str,
+    by: list[str],
+    compression: float = 100.0,
+    stream_id: str | None = None,
+) -> None:
+    """ONE idempotent foreachBatch epoch of streaming per-group
+    percentiles (r14): build the batch's per-key t-digest table
+    (functions/tdigest.tdigest_sketch — map-side combine, digest-sized
+    shuffle) and fold it into the persisted table with
+    merge_digest_tables — the t-digest merge is its build on
+    concatenated centroid sets, so the k1 size bound and the pinned
+    rank-error contract hold over EVERYTHING ingested since the table
+    was born. Unlike the reservoir/HLL folds the merged digest is not
+    bit-identical to a one-pass build (compression of compressed
+    centroids takes a different centroid path), but estimates agree
+    within the documented rank error — the batch/stream parity test
+    pins both that tolerance and exact replay determinism. State is
+    one O(compression) digest row per key per kept epoch dir; read
+    with read_tdigest / functions.tdigest.digest_percentiles. Replay
+    protocol: _fold_summary_epoch."""
+    from meerkat_spark.functions.tdigest import (
+        merge_digest_tables,
+        tdigest_sketch,
+    )
+
+    def fold(current, batch):
+        batch_sk = tdigest_sketch(
+            batch, value_col, by=by, compression=compression
+        )
+        if current is None:
+            return batch_sk
+        return merge_digest_tables(
+            current.unionByName(batch_sk), by=by, compression=compression
+        )
+
+    _fold_summary_epoch(batch_df, epoch_id, digest_path, fold, stream_id)
+
+
+def read_tdigest(spark, digest_path: str) -> DataFrame:
+    """The persisted streaming digest table (by…, digest) at its
+    latest committed epoch — feed it to digest_percentiles /
+    digest_percentrank. Lazy over the epoch dir: the grace window of
+    _fold_summary_epoch applies."""
+    return _read_latest(spark, digest_path)[1]
+
+
+def start_tdigest_stream(
+    stream_df: DataFrame,
+    digest_path: str,
+    checkpoint: str,
+    value_col: str,
+    by: list[str],
+    compression: float = 100.0,
+    trigger_once: bool = True,
+) -> StreamingQuery:
+    """Streaming front-end for per-group running percentiles: each
+    micro-batch's t-digests fold into the persisted table
+    (tdigest_step) — the streaming twin of the stored-digest rollup
+    (functions/tdigest.py)."""
+    step = partial(
+        tdigest_step, digest_path=digest_path, value_col=value_col,
+        by=by, compression=compression,
+        stream_id=_stream_id_of(checkpoint),
+    )
+    return _start(stream_df, checkpoint, step, trigger_once)

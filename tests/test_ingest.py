@@ -217,3 +217,25 @@ def test_retention_drops_expired_day_partitions(spark, tmp_path):
     back = read_table(spark, path)
     assert back.count() == 6
     assert back.agg({"_ts": "min"}).collect()[0][0] >= dt.datetime(2024, 1, 10)
+
+
+def test_compaction_keeps_evolved_columns(spark, tmp_path):
+    """A day partition holding files written before and after a column
+    was added compacts to the merged schema: the new column survives,
+    null on the older rows. Each day is its own pair of appends, so a
+    reader that takes its schema from one arbitrary file per partition
+    is caught with near certainty."""
+    path = str(tmp_path / "tbl_evolve")
+    cfg = IngestConfig(path=path)
+    days = [f"2024-03-0{d} 10:00:00" for d in range(1, 7)]
+    for ts in days:
+        ingest_rows(spark, [{"x": i, TS_COL: ts} for i in range(50)], cfg)
+        ingest_rows(
+            spark,
+            [{"x": i, "country": f"c{i % 3}", TS_COL: ts} for i in range(50, 100)],
+            cfg,
+        )
+    assert len(compact_table(spark, path)) == len(days)
+    back = read_table(spark, path)
+    assert back.count() == 100 * len(days)
+    assert back.filter(F.col("country").isNotNull()).count() == 50 * len(days)

@@ -777,3 +777,102 @@ def test_weighted_sample_step_crash_states(spark, tmp_path):
     with open(os.path.join(ws, "_latest")) as f:
         assert f.read().strip() == "summary-3"
     assert sorted(map(tuple, read_weighted_sample(spark, ws).collect())) == want
+
+
+def test_fold_sweep_keeps_previous_target_across_checkpoints(spark, tmp_path):
+    """Re-pointing a merge-fold keeper at a fresh checkpoint restarts
+    its epoch ids at 0 under a new stream id. The sweep must still keep
+    the previous pointer target, so a reader frame handed out before a
+    fold collects after it, whatever the epoch numbers of older dirs;
+    everything else is reclaimed."""
+    from meerkat_spark.streaming.ingest import (
+        _stream_id_of,
+        heavy_hitters_step,
+        read_heavy_hitters_summary,
+    )
+
+    hh = str(tmp_path / "hh")
+    sid_a = _stream_id_of(str(tmp_path / "ck_a"))
+    sid_b = _stream_id_of(str(tmp_path / "ck_b"))
+
+    def batch(k):
+        return spark.createDataFrame([(f"k{k}",)] * 5, "key string")
+
+    for e in range(4):
+        heavy_hitters_step(batch(e), e, hh, "key", capacity=10, stream_id=sid_a)
+    heavy_hitters_step(batch(10), 0, hh, "key", capacity=10, stream_id=sid_b)
+    held = read_heavy_hitters_summary(spark, hh)
+    heavy_hitters_step(batch(11), 1, hh, "key", capacity=10, stream_id=sid_b)
+
+    assert len(held.collect()) == 5
+    assert sorted(d for d in os.listdir(hh) if d.startswith("summary-")) == [
+        f"summary-{sid_b}-0",
+        f"summary-{sid_b}-1",
+    ]
+
+
+@pytest.mark.parametrize("keeper", ["hll", "tdigest"])
+def test_fold_keeper_crash_states(spark, tmp_path, keeper):
+    """The three replay states of test_heavy_hitters_step_replay_idempotent
+    through the HLL and t-digest keepers: (a) marker present, (b) dir
+    complete but marker lost, (c) dir complete but pointer behind. Each
+    replays to the state of an uncrashed run, and (c) adopts the
+    complete dir instead of folding the batch again."""
+    import shutil
+    from functools import partial
+
+    from meerkat_spark.streaming import ingest
+
+    step, read = {
+        "hll": (
+            partial(ingest.hll_distinct_step, value_col="id", by=["g"]),
+            ingest.read_hll_distinct,
+        ),
+        "tdigest": (
+            partial(ingest.tdigest_step, value_col="v", by=["g"]),
+            ingest.read_tdigest,
+        ),
+    }[keeper]
+    batches = [
+        spark.createDataFrame(
+            [(100 * e + j, f"g{j % 3}", float(j * (e + 1) % 37)) for j in range(60)],
+            "id long, g string, v double",
+        )
+        for e in range(4)
+    ]
+
+    def state(path):
+        return sorted(map(repr, read(spark, path).collect()))
+
+    control = str(tmp_path / "control")
+    for e, b in enumerate(batches):
+        step(b, e, control)
+
+    path = str(tmp_path / keeper)
+    for e, b in enumerate(batches[:3]):
+        step(b, e, path)
+    base = state(path)
+
+    # (a) plain redelivery of every epoch
+    for e, b in enumerate(batches[:3]):
+        step(b, e, path)
+    assert state(path) == base
+
+    # (b) epoch dir complete, marker lost
+    marker = os.path.join(path, "_epochs", "epoch-2")
+    os.remove(marker)
+    step(batches[2], 2, path)
+    assert os.path.exists(marker)
+    assert state(path) == base
+
+    # (c) epoch 3's complete dir (from the uncrashed run) is in place,
+    # the pointer is still at epoch 2 and there is no marker
+    planted = os.path.join(path, "summary-3")
+    shutil.copytree(os.path.join(control, "summary-3"), planted)
+    files = sorted(os.listdir(planted))
+    step(batches[3], 3, path)
+    with open(os.path.join(path, "_latest")) as f:
+        assert f.read().strip() == "summary-3"
+    assert sorted(os.listdir(planted)) == files
+    assert os.path.exists(os.path.join(path, "_epochs", "epoch-3"))
+    assert state(path) == state(control)

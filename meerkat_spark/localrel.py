@@ -13,6 +13,20 @@ pandas/Arrow coercion differences) and pays a single Python round trip
 per action: ~0.17 s vs ~4.7 s coalesced vs ~0.4 s full-width on the
 bench host, with the 1-partition structure every downstream broadcast
 build wants.
+
+``ivf_search``'s driver tables (the query x cell probe table, the
+small-refine rerank pairs and the PQ auto-split's query chunks) do not
+use ``local_df``: they are all-numeric and their vectors are already one
+numpy matrix, so they are handed to ``createDataFrame`` as a pyarrow
+Table. Spark decodes those Arrow batches in the JVM into a
+LocalTableScan, whatever ``spark.sql.execution.arrow.pyspark.enabled``
+says, so the broadcast build needs no Python worker. Measured on a
+4-vCPU VM (pyspark 4.1.2, local[4], a 16-row x 32-dim probe table
+broadcast-joined to 10k rows, then collected, 10 alternating runs each):
+0.32-0.50 s (median 0.39-0.42) over the ``local_df`` table, 0.15-0.29 s
+(median 0.19-0.24) over the Arrow table, identical rows. Tables with
+strings or mixed Python values keep ``local_df`` and its exact
+list-path type conversion.
 """
 
 from __future__ import annotations

@@ -29,6 +29,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
+from pyspark.sql import types as T
 
 from meerkat_spark.localrel import local_df, sql_in
 from meerkat_spark.similarity import knn
@@ -170,6 +171,22 @@ def _assign_and_write(
     assigned.write.mode(mode).partitionBy("cell_id").parquet(
         os.path.join(path, "assigned")
     )
+
+
+def _assigned_schema(quantize: bool, has_pq: bool) -> T.StructType:
+    """The schema a whole-directory read of the `assigned/` table
+    infers for an index written with these flags: the data columns in
+    file order, then the partition column, which partition discovery
+    types as int (cell ids stay far below 2^31). A search passes it to
+    the reader so that neither a listing nor a schema-inference job
+    runs; tests/test_ivf_index.py pins it against a cold read."""
+    fields = [("neighbor_id", T.LongType()), ("cv", T.ArrayType(T.DoubleType()))]
+    if quantize:
+        fields += [("q", T.ArrayType(T.ByteType())), ("q_scale", T.DoubleType())]
+    if has_pq:
+        fields.append(("codes", T.ArrayType(T.ShortType())))
+    fields.append(("cell_id", T.IntegerType()))
+    return T.StructType([T.StructField(name, t) for name, t in fields])
 
 
 def _write_meta_table(path: str, table) -> None:
@@ -446,6 +463,9 @@ def build_ivf_index(
             ),
             "books": pq_books,
             "rotated": bool(pq_rotate) if pq_books is not None else None,
+            "assigned_schema": _assigned_schema(
+                bool(quantize), pq_books is not None
+            ),
         },
     )
 
@@ -457,9 +477,10 @@ _META_CACHE_MAX = 8
 def _meta_signature(path: str) -> tuple:
     """Freshness signature of an index's METADATA tables (file name +
     mtime_ns + size for centroids/supercentroids/pq_codebooks/pq_meta).
-    The big `assigned` table is deliberately excluded — extends append
-    to it without touching the routing metadata, and searches read it
-    lazily every time."""
+    The big `assigned` table is deliberately excluded — extends and
+    compactions rewrite its files but neither its schema nor the
+    routing metadata, and a search lists only its probed cells'
+    directories, never the whole table."""
     sig = []
     for sub in ("centroids", "supercentroids", "pq_codebooks", "pq_meta"):
         d = os.path.join(path, sub)
@@ -479,7 +500,9 @@ def _seed_meta_cache(path: str, meta: dict) -> None:
 def _load_index_meta(spark: SparkSession, path: str) -> dict:
     """Load (and CACHE, keyed on the metadata files' signature) the
     driver-side routing state of a persisted index: centroid matrix,
-    supercentroid routing, PQ codebooks, OPQ flag. An index handle is
+    supercentroid routing, PQ codebooks, OPQ flag, and the `assigned`
+    table's schema (one whole-directory read here, so that searches
+    and extends never list that table). An index handle is
     read-many — repeat searches against the same index were paying 2-4
     driver collects of identical small tables per call (also the
     dominant source of pyspark's per-collect unclosed-socket
@@ -525,6 +548,7 @@ def _load_index_meta(spark: SparkSession, path: str) -> dict:
         "supercents": supercents,
         "books": books,
         "rotated": rotated,
+        "assigned_schema": spark.read.parquet(os.path.join(path, "assigned")).schema,
     }
     if len(_META_CACHE) >= _META_CACHE_MAX and path not in _META_CACHE:
         _META_CACHE.pop(next(iter(_META_CACHE)))
@@ -534,7 +558,8 @@ def _load_index_meta(spark: SparkSession, path: str) -> dict:
 
 def _cached_meta_matches_cold_read(spark: SparkSession, path: str) -> bool:
     """Test hook: assert the build-time pre-seeded cache equals a cold
-    re-read of the metadata tables (field-by-field numpy equality)."""
+    re-read of the metadata tables (field-by-field numpy equality) and
+    of the `assigned` schema (names, types and nullability)."""
     seeded = _META_CACHE.get(path)
     if seeded is None:
         return False
@@ -547,7 +572,10 @@ def _cached_meta_matches_cold_read(spark: SparkSession, path: str) -> bool:
             return False
         if a is not None and not np.allclose(a, b):
             return False
-    return warm.get("rotated") == cold.get("rotated")
+    return (
+        warm.get("rotated") == cold.get("rotated")
+        and warm.get("assigned_schema") == cold.get("assigned_schema")
+    )
 
 
 def extend_ivf_index(
@@ -598,7 +626,7 @@ def extend_ivf_index(
         from meerkat_spark.similarity.pq import opq_rotation
 
         pq_rot = opq_rotation(pq_books.shape[0] * pq_books.shape[2])
-    quantize = "q" in spark.read.parquet(os.path.join(path, "assigned")).columns
+    quantize = "q" in meta["assigned_schema"].fieldNames()
     bc_route = spark.sparkContext.broadcast(
         {
             "cents": cents,
@@ -896,6 +924,24 @@ def maintain_ivf_index(
     return out
 
 
+def _arrow_df(spark: SparkSession, ddl: str, cols: dict) -> DataFrame:
+    """`createDataFrame` over numpy columns (in `ddl`'s order) through a
+    pyarrow Table; a 2-D float matrix becomes one array<double> column,
+    a ListArray over the matrix's buffer. The JVM decodes the Arrow
+    batches itself, so consuming the frame runs no Python worker,
+    whatever spark.sql.execution.arrow.pyspark.enabled says
+    (localrel.py docstring)."""
+    import pyarrow as pa
+
+    arrays = {}
+    for name, v in cols.items():
+        if v.ndim == 2:
+            offsets = np.arange(0, v.size + 1, v.shape[1], dtype=np.int32)
+            v = pa.ListArray.from_arrays(offsets, pa.array(v.ravel()))
+        arrays[name] = v
+    return spark.createDataFrame(pa.table(arrays), ddl)
+
+
 def ivf_search(
     spark: SparkSession,
     path: str,
@@ -906,9 +952,15 @@ def ivf_search(
     vec_col: str = "embedding",
     refine: int | None = None,
 ) -> DataFrame:
-    """Top-k over a persisted IVF index. The probed cell_ids land in the
-    scan as partition filters, so only n_probe/n_cells of the corpus is
-    read — the plan property tests/test_ivf_index.py asserts.
+    """Top-k over a persisted IVF index. The scan reads only the probed
+    cells' `cell_id=` directories, with the `assigned` schema from the
+    cached index metadata, so only n_probe/n_cells of the corpus is
+    read and no listing or schema-inference job runs; the probed
+    cell_ids also stay in the plan as partition filters — the plan
+    property tests/test_ivf_index.py asserts. A probed cell with no
+    directory (k-means left it empty) contributes no rows. The
+    driver-side probe and rerank tables are built from numpy as Arrow
+    tables, so they ship without a Python-worker job.
 
     Quantized indexes (built with quantize=True) search in two passes:
     score candidates against only the int8 `q` column (cosine is
@@ -941,6 +993,8 @@ def ivf_search(
     if not len(cents) or not len(q_pdf):
         # empty index or empty query set → empty result, not a crash
         return local_df(spark, [], out_schema)
+    q_ids = q_pdf["query_id"].to_numpy(dtype=np.int64)
+    Q = np.stack(q_pdf["qv"].to_numpy()).astype(np.float64)
     if meta["books"] is not None:
         from meerkat_spark.similarity.pq import MAX_ADC_LUT_ENTRIES
 
@@ -950,14 +1004,13 @@ def ivf_search(
         if len(q_pdf) > max_q and len(q_pdf) * lut_per_q > MAX_ADC_LUT_ENTRIES:
             out = None
             for start in range(0, len(q_pdf), max_q):
-                chunk = q_pdf.iloc[start : start + max_q]
-                chunk_df = local_df(
+                chunk_df = _arrow_df(
                     spark,
-                    [
-                        (int(r.query_id), [float(x) for x in r.qv])
-                        for r in chunk.itertuples()
-                    ],
                     f"{id_col} long, {vec_col} array<double>",
+                    {
+                        id_col: q_ids[start : start + max_q],
+                        vec_col: Q[start : start + max_q],
+                    },
                 )
                 res = ivf_search(
                     spark, path, chunk_df, k=k, n_probe=n_probe,
@@ -965,7 +1018,6 @@ def ivf_search(
                 )
                 out = res if out is None else out.unionByName(res)
             return out
-    Q = np.stack(q_pdf["qv"].to_numpy()).astype(np.float64)
     Qn = Q / np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-12)
     if meta["supercents"] is not None:
         # Two-level index: probe selection MUST mirror the build routing
@@ -988,6 +1040,31 @@ def ivf_search(
     else:
         top_cells = np.argsort(-(Qn @ cents.T), axis=1)[:, :n_probe]
     probed = sorted({int(c) for row in top_cells for c in row})
+    # Read ONLY the probed cells' directories, with the cached schema:
+    # a whole-table read lists every cell_id= dir (above Spark's
+    # 32-path threshold that is a distributed listing job) and infers
+    # the schema in a second job, on every call. Up to 32 probed dirs
+    # are listed on the driver; more still pay one listing job, over
+    # those dirs only. A probed cell k-means left empty has no
+    # directory, and a missing path would fail the read. The In filter
+    # is redundant with the path list but keeps the cells visible as
+    # PartitionFilters in the plan.
+    a_dir = os.path.join(path, "assigned")
+    probed_dirs = [
+        d for d in (os.path.join(a_dir, f"cell_id={c}") for c in probed)
+        if os.path.isdir(d)
+    ]
+    if not probed_dirs:
+        return local_df(spark, [], out_schema)
+    a_schema = meta["assigned_schema"]
+    assigned = (
+        spark.read.schema(a_schema)
+        .option("basePath", a_dir)
+        .parquet(*probed_dirs)
+        # sql_in renders the In predicate in one py4j call (isin pays
+        # one round trip per probed cell — localrel.sql_in docstring)
+        .filter(sql_in("cell_id", probed))
+    )
 
     # distinct (query, cell) probes — the two-level path PADS short
     # cell lists by repeating the first cell, and a duplicate probe row
@@ -997,26 +1074,22 @@ def ivf_search(
     # most once BY CONSTRUCTION — no dedup shuffle of the full coarse
     # candidate set is needed (r11: replaced the dropDuplicates that
     # re-shuffled n_queries * n_probe * corpus/n_cells rows).
-    # single-partition local relation: the probe table is n_queries x
-    # n_probe driver rows feeding broadcast joins (localrel.py)
-    q_cells = local_df(
+    probes = np.array(
+        [(i, c) for i, row in enumerate(top_cells.tolist())
+         for c in dict.fromkeys(row)],
+        dtype=np.int64,
+    )
+    q_cells = _arrow_df(
         spark,
-        [
-            (int(q_pdf["query_id"][i]), [float(x) for x in q_pdf["qv"][i]], int(c))
-            for i in range(len(q_pdf))
-            for c in dict.fromkeys(int(x) for x in top_cells[i])
-        ],
         "query_id long, qv array<double>, cell_id long",
+        {
+            "query_id": q_ids[probes[:, 0]],
+            "qv": Q[probes[:, 0]],
+            "cell_id": probes[:, 1],
+        },
     )
-    assigned_all = spark.read.parquet(os.path.join(path, "assigned"))
-    assigned = assigned_all.filter(
-        # -> partition pruning on the index layout; sql_in renders the
-        # identical In predicate in one py4j call (isin pays one round
-        # trip per probed cell — localrel.sql_in docstring)
-        sql_in("cell_id", probed)
-    )
-    is_pq = meta["books"] is not None and "codes" in assigned_all.columns
-    if is_pq or "q" in assigned_all.columns:
+    is_pq = meta["books"] is not None and "codes" in a_schema.fieldNames()
+    if is_pq or "q" in a_schema.fieldNames():
         refine_n = refine or max(8 * k, 32)
         if is_pq:
             # IVFPQ coarse pass: per-query ADC lookup tables built
@@ -1095,24 +1168,24 @@ def ivf_search(
             # bounded collect replaces the eager localCheckpoint + the
             # limit(N+1) id probe — one Spark job instead of two — and
             # the rerank pair table (query vector attached) is built
-            # driver-side from arrays already in hand (q_pdf), then
+            # driver-side from arrays already in hand (Q), then
             # broadcast. The literal isin keeps the row-group-prunable
             # neighbor_id pushdown into the float read.
             pair_rows = cand_topk.collect()
             if is_pq:
                 bc_lut.destroy()  # coarse pass consumed by the collect
-            qv_of = {
-                int(q_pdf["query_id"][i]): [float(x) for x in q_pdf["qv"][i]]
-                for i in range(len(q_pdf))
-            }
-            cand_ids = sorted({int(r.neighbor_id) for r in pair_rows})
-            rerank = local_df(
+            pair_q = np.array([r.query_id for r in pair_rows], dtype=np.int64)
+            pair_n = np.array([r.neighbor_id for r in pair_rows], dtype=np.int64)
+            pos = {q: i for i, q in enumerate(q_ids.tolist())}
+            cand_ids = np.unique(pair_n).tolist()
+            rerank = _arrow_df(
                 spark,
-                [
-                    (int(r.query_id), int(r.neighbor_id), qv_of[int(r.query_id)])
-                    for r in pair_rows
-                ],
                 "query_id long, neighbor_id long, qv array<double>",
+                {
+                    "query_id": pair_q,
+                    "neighbor_id": pair_n,
+                    "qv": Q[[pos[q] for q in pair_q.tolist()]],
+                },
             )
             floats = assigned.filter(sql_in("neighbor_id", cand_ids)).select(
                 "neighbor_id", "cv"

@@ -4,6 +4,8 @@ reuse the stored assignment (no retraining)."""
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 from pyspark.sql import functions as F
 
@@ -481,9 +483,12 @@ def test_meta_cache_seed_equals_cold_read(spark, tmp_path):
     seeded value must equal a cold re-read of the persisted tables for
     every index variant, and a REBUILD at the same path must invalidate
     the cache (signature change)."""
+    from pyspark.sql.types import LongType, StructField, StructType
+
     from meerkat_spark.similarity.ivf_index import (
         _cached_meta_matches_cold_read,
         _load_index_meta,
+        _seed_meta_cache,
     )
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
@@ -498,6 +503,16 @@ def test_meta_cache_seed_equals_cold_read(spark, tmp_path):
         idx = str(tmp_path / f"ivf{i}")
         build_ivf_index(emb, idx, **kwargs)
         assert _cached_meta_matches_cold_read(spark, idx), kwargs
+
+    # the `assigned` schema is compared too: a seeded type drift (the
+    # write side's cell_id long vs the int a cold read infers) must fail
+    # here rather than surface in a search
+    drifted = dict(_load_index_meta(spark, idx))
+    drifted["assigned_schema"] = StructType(
+        drifted["assigned_schema"].fields[:-1] + [StructField("cell_id", LongType())]
+    )
+    _seed_meta_cache(idx, drifted)
+    assert not _cached_meta_matches_cold_read(spark, idx)
 
     # rebuild invalidation: different cell count at the SAME path must
     # not serve the stale cached routing
@@ -719,3 +734,94 @@ def test_maintain_rebuild_branch_heals_and_opts_in(spark, tmp_path):
     s = ivf_index_stats(spark, idx, skew_rebuild_ratio=5.0)
     assert s["recommendation"] != "rebuild"
     assert s["skew_ratio"] < 5.0
+
+
+def test_search_probed_cell_without_directory(spark, tmp_path):
+    """A probed cell with no `cell_id=` directory (what a cell k-means
+    left empty looks like) contributes no rows: a search that probes it
+    among other cells returns what the remaining probed rows give, and a
+    search whose only probed cell lacks a directory returns the empty
+    result frame instead of failing on the missing path."""
+    import shutil
+
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet").select("vec_id", "embedding")
+    idx = str(tmp_path / "ivf_gap")
+    build_ivf_index(emb, idx, n_cells=8)
+    assigned = spark.read.parquet(f"{idx}/assigned")
+    cell_of = {
+        r.neighbor_id: r.cell_id
+        for r in assigned.select("neighbor_id", "cell_id").collect()
+    }
+    # query 0 routes to the cell its own vector was assigned to
+    gone = cell_of[0]
+    q = emb.filter(F.col("vec_id") < 8)
+    # k above the corpus size: every probed candidate comes back ranked
+    before = ivf_search(spark, idx, q, k=1000, n_probe=3).collect()
+    assert {cell_of[r.neighbor_id] for r in before if r.query_id == 0} - {gone}
+
+    shutil.rmtree(f"{idx}/assigned/cell_id={gone}")
+    after = ivf_search(spark, idx, q, k=1000, n_probe=3).collect()
+    kept = [r for r in before if cell_of[r.neighbor_id] != gone]
+    assert {(r.query_id, r.neighbor_id, r.sim) for r in after} == {
+        (r.query_id, r.neighbor_id, r.sim) for r in kept
+    }
+    by_q: dict[int, list[int]] = {}
+    for r in after:
+        by_q.setdefault(r.query_id, []).append(r.rank)
+    for qid, ranks in by_q.items():
+        assert sorted(ranks) == list(range(1, len(ranks) + 1)), qid
+
+    only_gone = ivf_search(spark, idx, emb.filter(F.col("vec_id") == 0), k=5, n_probe=1)
+    assert only_gone.schema.simpleString() == (
+        "struct<query_id:bigint,neighbor_id:bigint,sim:double,rank:int>"
+    )
+    assert only_gone.collect() == []
+
+
+def test_warm_search_launches_no_listing_job(spark, tmp_path):
+    """A warm search reads only its probed cells' directories with the
+    cached `assigned` schema. With more cells than Spark's 32-path
+    parallel-discovery threshold, a whole-table read pays a listing job
+    and a schema-inference job on every call; here construction may run
+    only the bounded query collect (float) plus the coarse candidate
+    collect (sq8, pq), and no job may come from a parquet read."""
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet").select("vec_id", "embedding")
+    q = emb.filter(F.col("vec_id") < 4)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def construct_jobs(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return [
+            tracker.getStageInfo(min(tracker.getJobInfo(j).stageIds)).name
+            for j in sorted(tracker.getJobIdsForGroup(group))
+        ]
+
+    query_collect = construct_jobs(
+        "ivf-warm-queries", lambda: knn.queries_to_pdf(q, "vec_id", "embedding")
+    )
+    assert query_collect
+    for name, kwargs in {
+        "float": {}, "sq8": {"quantize": True}, "pq": {"pq_m": 8}
+    }.items():
+        idx = str(tmp_path / name)
+        build_ivf_index(emb, idx, n_cells=40, **kwargs)
+        cells = [d for d in os.listdir(f"{idx}/assigned") if d.startswith("cell_id=")]
+        assert len(cells) > 32, (name, len(cells))
+        ivf_search(spark, idx, q, k=3, n_probe=1).collect()
+        calls = construct_jobs(
+            f"ivf-warm-{name}",
+            lambda: ivf_search(spark, idx, q, k=3, n_probe=1),
+        )
+        assert not [c for c in calls if c.startswith("parquet at")], (name, calls)
+        if name == "float":
+            assert len(calls) == len(query_collect), calls
+        else:
+            extra = calls[len(query_collect):]
+            assert calls[: len(query_collect)] == query_collect, (name, calls)
+            assert extra and all("ivf_index.py" in c for c in extra), (name, calls)

@@ -19,8 +19,9 @@ import uuid
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from meerkat_spark.ingest.batch import DAY_COL, DEDUP_COL, TS_COL
+from meerkat_spark.ingest.batch import DAY_COL, DEDUP_COL, TS_COL, _read_parquet, _recorded_schema
 
 
 def list_day_partitions(path: str) -> list[str]:
@@ -59,9 +60,14 @@ def compact_partition(
     from meerkat_spark.ingest.neardup_maintenance import _sweep_stale_swaps
 
     _sweep_stale_swaps(part_dir)
-    # mergeSchema, as read_table: without it Spark takes the schema of
-    # one arbitrary file and drops columns added by later appends
-    df = spark.read.option("mergeSchema", "true").parquet(part_dir)
+    # read with the table's recorded schema (minus the partition column)
+    # so columns added by later appends survive the rewrite without a
+    # footer-merge job: the record lists every column of every data file.
+    # A table without a record takes read_table's cold path.
+    schema = _recorded_schema(path)
+    if schema is not None:
+        schema = T.StructType([f for f in schema if f.name != DAY_COL])
+    df = _read_parquet(spark, schema, part_dir)
     deduped = df.dropDuplicates([TS_COL, DEDUP_COL]).coalesce(target_files)
     tmp_dir = part_dir + f".compact-{uuid.uuid4().hex[:8]}"
     deduped.write.mode("overwrite").parquet(tmp_dir)

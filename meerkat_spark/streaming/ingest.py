@@ -9,8 +9,9 @@ Reference semantics → Spark realization (SURVEY.md §2.2.6):
   state is bounded by the watermark (no unbounded dedup state — the
   100TB-stream concern in SURVEY.md §7.4.4).
 - time-partitioned segments (README.md:27) → foreachBatch append
-  partitioned by `_ts_day` (same layout as batch ingest — batch and
-  streaming land in one table).
+  partitioned by `_ts_day` through batch ingest's writer, which also
+  keeps the table's schema record — batch and streaming land in one
+  table.
 - `bin()`/session windows on live data → window()/session_window()
   aggregations with watermarks.
 
@@ -33,7 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from meerkat_spark.ingest.batch import DAY_COL, DEDUP_COL, TS_COL, _ensure_system_columns
+from meerkat_spark.ingest.batch import DEDUP_COL, TS_COL, _append, _ensure_system_columns
 
 
 def _start(
@@ -69,12 +70,7 @@ def start_stream_ingest(
     )
 
     def _write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        (
-            batch_df.withColumn(DAY_COL, F.date_format(F.col(TS_COL), "yyyy-MM-dd"))
-            .write.mode("append")
-            .partitionBy(DAY_COL)
-            .parquet(out_path)
-        )
+        _append(batch_df, out_path)
 
     return _start(deduped, checkpoint, _write_batch, trigger_once)
 

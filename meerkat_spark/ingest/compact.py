@@ -57,7 +57,7 @@ def compact_partition(
     # renames makes that residue the only copy — deleting it destroyed
     # the partition), and only deletes residue while the live dir
     # exists. Same single-writer-per-table contract as the sweep.
-    from meerkat_spark.ingest.neardup_maintenance import _sweep_stale_swaps
+    from meerkat_spark.ingest.neardup_maintenance import _swap_in, _sweep_stale_swaps
 
     _sweep_stale_swaps(part_dir)
     # read with the table's recorded schema (minus the partition column)
@@ -77,10 +77,7 @@ def compact_partition(
     after = _footer_row_count(tmp_dir)
     # atomic-ish swap (single filesystem rename pair; object stores would
     # use a manifest commit instead — documented architectural delta)
-    old_dir = part_dir + f".old-{uuid.uuid4().hex[:8]}"
-    os.rename(part_dir, old_dir)
-    os.rename(tmp_dir, part_dir)
-    shutil.rmtree(old_dir)
+    _swap_in(tmp_dir, part_dir)
     return before, after
 
 

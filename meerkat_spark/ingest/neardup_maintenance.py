@@ -206,6 +206,22 @@ def _parquet_file_count(root: str) -> int:
     )
 
 
+def _swap_in(tmp: str, live: str) -> None:
+    """Replace directory `live` with the finished rewrite `tmp`: rename
+    `live` out to a unique `<live>.old-<uuid>`, rename `tmp` in, delete
+    the old copy. The unique name keeps a crashed swap's residue from
+    blocking the next one; a crash between the two renames leaves the
+    `.old-*` copy as the only one, and _sweep_stale_swaps restores it."""
+    import os
+    import shutil
+    import uuid
+
+    old = live + f".old-{uuid.uuid4().hex[:8]}"
+    os.rename(live, old)
+    os.rename(tmp, live)
+    shutil.rmtree(old)
+
+
 def _sweep_stale_swaps(dir_path: str) -> None:
     """Remove leftovers of a compaction that crashed mid-swap: stale
     `<dir>.old-*` (renamed-out originals whose rmtree never ran) and
@@ -274,8 +290,6 @@ def _compact_dir(
     can leave (a crash BETWEEN a multi-job extend's commits re-appends
     the already-committed table's rows on replay). Returns
     (files_before, files_after)."""
-    import os
-    import shutil
     import uuid
 
     _sweep_stale_swaps(dir_path)
@@ -290,12 +304,7 @@ def _compact_dir(
         n_files = max(1, -(-df.count() // target_rows_per_file))
         w = df.repartition(n_files).write
     w.mode("overwrite").parquet(tmp)
-    # unique .old name: a crash between the two renames must never
-    # block the NEXT compaction (the sweep above reclaims the space)
-    old = dir_path + f".old-{uuid.uuid4().hex[:8]}"
-    os.rename(dir_path, old)
-    os.rename(tmp, dir_path)
-    shutil.rmtree(old)
+    _swap_in(tmp, dir_path)
     return before, _parquet_file_count(dir_path)
 
 

@@ -2437,9 +2437,7 @@ class Translator:
                 # Sessions break on restart / idle gap > IdleTimeout;
                 # the MaxDuration cap restarts GREEDILY at the first
                 # breaching row (Kusto-exact, round 7 — differential-
-                # pinned in tests/test_kql.py); set
-                # MEERKAT_ROW_WINDOW_SESSION_ALIGNED=1 for the aligned
-                # sub-bucket fast path (one window pass, no shuffle).
+                # pinned in tests/test_kql.py).
                 if not self.serialize_order:
                     raise KqlSyntaxError(
                         "row_window_session() requires a serialized table"
@@ -2468,32 +2466,7 @@ class Translator:
                     F.sum(F.when(brk, 1).otherwise(0)).over(w),
                 )
                 max_us = int(max_dur.seconds * 1e6)
-                if os.environ.get("MEERKAT_ROW_WINDOW_SESSION_ALIGNED") == "1":
-                    # documented FAST PATH (pure window, no extra
-                    # shuffle): MaxDuration as aligned sub-buckets of
-                    # the idle-segment start — an approximation of
-                    # Kusto's greedy restart, kept for pipelines that
-                    # prefer one window pass over exactness
-                    wseg = self._ser_window_by("__ss_seg")
-                    seg_start = F.first(us).over(
-                        wseg.rowsBetween(W.unboundedPreceding, W.currentRow)
-                    )
-                    sub = F.floor((us - seg_start) / F.lit(max_us))
-                    df = df.withColumn("__ss_sub", sub)
-                    wfin = self._ser_window_by(
-                        "__ss_seg", "__ss_sub"
-                    ).rowsBetween(W.unboundedPreceding, W.currentRow)
-                    t = MeerkatTable(
-                        df.withColumn(
-                            out_name,
-                            self._guard_serialized(
-                                F.first(expr_c).over(wfin),
-                                "row_window_session",
-                            ),
-                        ).drop("__ss_seg", "__ss_sub")
-                    )
-                    continue
-                # DEFAULT: Kusto-exact greedy MaxDuration — a session
+                # Kusto-exact greedy MaxDuration — a session
                 # restarts at the first row breaching session_start +
                 # MaxDuration (data-dependent). Idle/restart breaks stay
                 # window-computed; the greedy refinement distributes as

@@ -85,47 +85,45 @@ def _cluster_centroids(cents: np.ndarray, n_super: int, n_iter: int = 10):
 
 
 
-def _assign_and_write(
-    c: DataFrame,
-    path: str,
-    bc_route,
-    quantize: bool,
-    has_pq: bool,
-    mode: str,
-) -> None:
-    """Route every (neighbor_id, cv) row to its cell with one
-    shuffle-free Arrow matmul pass (+ optional SQ8/PQ encode) and write
-    the result partitioned by cell_id. Shared by the initial build
-    (mode='overwrite') and incremental extension (mode='append') so the
-    two paths can never diverge in routing or encoding."""
+def _assign_and_write(c: DataFrame, path: str, meta: dict, mode: str) -> None:
+    """Write every (neighbor_id, cv) row to its home cell, column 0 of
+    knn._route (the cell every search probes first), in one
+    shuffle-free Arrow pass, with the SQ8/PQ codes `meta` calls for,
+    partitioned by cell_id. The initial build (mode='overwrite') and
+    extend (mode='append') both write through here from the index's
+    metadata dict (the _load_index_meta shape), so their routing and
+    encoding cannot diverge.
+
+    The routing and codebook matrices ship as one BROADCAST variable,
+    not UDF-closure captures: a closure is re-serialized into every
+    task binary (at 32k cells x 768 dims the matrix is ~200 MB), a
+    broadcast ships once per executor. The write is its only consumer,
+    so it is destroyed when the write returns."""
+    quantize = "q" in meta["assigned_schema"].fieldNames()
+    has_pq = meta["books"] is not None
+    pq_rot = None
+    if has_pq and meta["rotated"]:
+        from meerkat_spark.similarity.pq import opq_rotation
+
+        pq_rot = opq_rotation(meta["books"].shape[0] * meta["books"].shape[2])
+    bc_route = c.sparkSession.sparkContext.broadcast(
+        tuple(meta[k] for k in ("cents", "supercents", "super_of_cell", "books"))
+        + (pq_rot,)
+    )
 
     def assign_cells(batches):
         import pandas as pd  # noqa: F401 — worker-side
 
-        rt = bc_route.value
-        cents_v, supercents_v = rt["cents"], rt["supercents"]
-        members_v, pq_books_v = rt["members"], rt["pq_books"]
-        pq_rot_v = rt["pq_rot"]
+        cents_v, supercents_v, super_of_cell_v, pq_books_v, pq_rot_v = bc_route.value
         for pdf in batches:
             if not len(pdf):
                 continue
             C = np.stack(pdf["cv"].to_numpy()).astype(np.float64)
-            Cn = C / np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-12)
+            Cn = knn._unit(C)
             pdf = pdf[["neighbor_id", "cv"]].copy()
-            if supercents_v is None:
-                pdf["cell_id"] = (Cn @ cents_v.T).argmax(axis=1).astype("int64")
-            else:
-                sup = (Cn @ supercents_v.T).argmax(axis=1)
-                cell = np.empty(len(Cn), dtype=np.int64)
-                for g in range(len(supercents_v)):
-                    idx = np.flatnonzero(sup == g)
-                    if not len(idx):
-                        continue
-                    mem = members_v[g]
-                    # rows routed to g compete only among g's cells:
-                    # |rows| x |mem| matmul, ~n/n_super x n_cells/n_super
-                    cell[idx] = mem[(Cn[idx] @ cents_v[mem].T).argmax(axis=1)]
-                pdf["cell_id"] = cell
+            pdf["cell_id"] = knn._route(
+                Cn, cents_v, 1, supercents_v, super_of_cell_v
+            )[:, 0]
             if quantize:
                 # symmetric per-vector int8 (quantize.py formula, same
                 # half-up rounding): scale = max|v|/127, q = clip(
@@ -138,7 +136,7 @@ def _assign_and_write(
                 ).astype(np.int8)
                 pdf["q"] = list(codes)
                 pdf["q_scale"] = scale
-            if pq_books_v is not None:
+            if has_pq:
                 from meerkat_spark.similarity.pq import _encode_matrix
 
                 # encode the NORMALIZED vectors: the search-side ADC
@@ -168,9 +166,12 @@ def _assign_and_write(
         # neighbor_id order inside each cell file ⇒ Parquet row-group
         # min/max stats make the rerank's neighbor_id pushdown prune
         assigned = assigned.sortWithinPartitions("cell_id", "neighbor_id")
-    assigned.write.mode(mode).partitionBy("cell_id").parquet(
-        os.path.join(path, "assigned")
-    )
+    try:
+        assigned.write.mode(mode).partitionBy("cell_id").parquet(
+            os.path.join(path, "assigned")
+        )
+    finally:
+        bc_route.destroy()
 
 
 def _assigned_schema(quantize: bool, has_pq: bool) -> T.StructType:
@@ -239,20 +240,13 @@ def build_ivf_index(
 
     `two_level=True` (IMI-style, after FAISS's multi-index idea) routes
     the assignment matmul through ~sqrt(n_cells) superclusters: per row,
-    argmax over n_super supercentroids, then argmax over ONLY that
+    the best of n_super supercentroids, then the best of ONLY that
     supercluster's member cells — O(n * n^0.25) assignment work instead
     of the flat O(n * sqrt(n)). Assignment becomes approximate in the
     usual IVF sense (a vector near a supercluster boundary may land in
-    a near- rather than nearest cell); search applies the IDENTICAL
-    routing, so identical vectors always meet in the same cell and the
-    exact-duplicate recall contract (ivf_persisted_recall) holds.
-    Caveat on that contract (ADVICE r9): it additionally assumes the
-    build's batched 2-D gemm and the search's per-row gemv produce
-    bitwise-identical routing dot products; BLAS may differ in the last
-    ulp between those shapes, so a vector whose top-2 cell scores tie
-    within rounding could in principle route differently at build vs
-    search time. Never observed on this data; if it ever flakes, switch
-    both routings to an order-deterministic per-row reduction.
+    a near- rather than nearest cell). Build, extend and search all
+    route through knn._route, whose docstring states the contract that
+    makes identical vectors meet in the same cell (ivf_persisted_recall).
 
     `quantize=True` additionally stores int8 codes (`q`, array<tinyint>
     — the symmetric per-vector scheme of similarity/quantize.py, scale
@@ -350,47 +344,22 @@ def build_ivf_index(
             rotate=pq_rotate,
             normalize=True,
         )
-    supercents = super_of_cell = None
+    supercents = None
+    super_of_cell = np.zeros(len(cents), np.int64)
     if two_level:
         n_super = int(max(round(len(cents) ** 0.5), 2))
         supercents, super_of_cell = _cluster_centroids(cents, n_super)
-        # member cell ids per supercluster, for the grouped argmax
-        members = [
-            np.flatnonzero(super_of_cell == g) for g in range(len(supercents))
-        ]
-
-    # Ship the centroid/routing/codebook matrices as BROADCAST
-    # variables, not UDF-closure captures: a closure is re-serialized
-    # into every task binary (the ~1.2 MiB "Broadcasting large task
-    # binary" DAGScheduler warnings VERDICT r10 flagged — and at 32k
-    # cells x 768 dims the matrix is ~200 MB, a per-task killer), while
-    # a broadcast ships once per executor over the torrent protocol.
-    sc = emb.sparkSession.sparkContext
-    pq_rot = None
-    if pq_books is not None and pq_rotate:
-        from meerkat_spark.similarity.pq import opq_rotation
-
-        pq_rot = opq_rotation(pq_books.shape[0] * pq_books.shape[2])
-    bc_route = sc.broadcast(
-        {
-            "cents": cents,
-            "supercents": supercents,
-            "members": members if two_level else None,
-            "pq_books": pq_books,
-            "pq_rot": pq_rot,
-        }
-    )
-
-    try:
-        _assign_and_write(
-            c, path, bc_route, bool(quantize), pq_books is not None, "overwrite"
-        )
-    finally:
-        # the write action above is the broadcast's only consumer —
-        # free the (up to ~200 MB) routing matrices from driver and
-        # executors instead of accumulating one block per build
-        # (ADVICE r11: long-lived sessions leak broadcast blocks)
-        bc_route.destroy()
+    # the same dict a cold _load_index_meta read reconstructs (pinned by
+    # tests/test_ivf_index.py); it seeds the cache once the tables exist
+    meta = {
+        "cents": np.asarray(cents, dtype=np.float64),
+        "super_of_cell": super_of_cell,
+        "supercents": supercents,
+        "books": pq_books,
+        "rotated": bool(pq_rotate) if pq_books is not None else None,
+        "assigned_schema": _assigned_schema(bool(quantize), pq_books is not None),
+    }
+    _assign_and_write(c, path, meta, "overwrite")
     import pyarrow as pa
 
     if pq_books is not None:
@@ -419,7 +388,6 @@ def build_ivf_index(
             os.path.join(path, "pq_meta"),
             pa.table({"rotated": pa.array([bool(pq_rotate)], pa.bool_())}),
         )
-    sup_col = super_of_cell if super_of_cell is not None else np.zeros(len(cents), np.int64)
     _write_meta_table(
         os.path.join(path, "centroids"),
         pa.table(
@@ -429,7 +397,7 @@ def build_ivf_index(
                     [cents[i].tolist() for i in range(len(cents))],
                     pa.list_(pa.float64()),
                 ),
-                "super_id": pa.array(sup_col.tolist(), pa.int64()),
+                "super_id": pa.array(super_of_cell.tolist(), pa.int64()),
             }
         ),
     )
@@ -448,26 +416,8 @@ def build_ivf_index(
         )
     # pre-seed the metadata cache from the arrays already in hand: the
     # dominant lifecycle is build-then-search (and extend), which would
-    # otherwise immediately re-collect the tables just written. The
-    # cached value is exactly what a cold _load_index_meta read
-    # reconstructs (pinned by tests/test_ivf_index.py).
-    _seed_meta_cache(
-        path,
-        {
-            "cents": np.asarray(cents, dtype=np.float64),
-            "super_of_cell": np.asarray(sup_col, dtype=np.int64),
-            "supercents": (
-                np.asarray(supercents, dtype=np.float64)
-                if supercents is not None
-                else None
-            ),
-            "books": pq_books,
-            "rotated": bool(pq_rotate) if pq_books is not None else None,
-            "assigned_schema": _assigned_schema(
-                bool(quantize), pq_books is not None
-            ),
-        },
-    )
+    # otherwise immediately re-collect the tables just written
+    _seed_meta_cache(path, meta)
 
 
 _META_CACHE: dict[str, tuple[tuple, dict]] = {}
@@ -491,10 +441,12 @@ def _meta_signature(path: str) -> tuple:
     return tuple(sig)
 
 
-def _seed_meta_cache(path: str, meta: dict) -> None:
+def _seed_meta_cache(path: str, meta: dict, sig: tuple | None = None) -> None:
+    """Cache `meta` for `path` under `sig` (default: the signature now),
+    evicting the oldest entry when full."""
     if len(_META_CACHE) >= _META_CACHE_MAX and path not in _META_CACHE:
         _META_CACHE.pop(next(iter(_META_CACHE)))
-    _META_CACHE[path] = (_meta_signature(path), meta)
+    _META_CACHE[path] = (_meta_signature(path) if sig is None else sig, meta)
 
 
 def _load_index_meta(spark: SparkSession, path: str) -> dict:
@@ -550,9 +502,9 @@ def _load_index_meta(spark: SparkSession, path: str) -> dict:
         "rotated": rotated,
         "assigned_schema": spark.read.parquet(os.path.join(path, "assigned")).schema,
     }
-    if len(_META_CACHE) >= _META_CACHE_MAX and path not in _META_CACHE:
-        _META_CACHE.pop(next(iter(_META_CACHE)))
-    _META_CACHE[path] = (sig, meta)
+    # keyed on the signature taken BEFORE the reads: metadata rewritten
+    # meanwhile misses next time instead of serving stale tables
+    _seed_meta_cache(path, meta, sig)
     return meta
 
 
@@ -611,38 +563,13 @@ def extend_ivf_index(
     (n_duplicate_rows) and maintain_ivf_index / compact_ivf_index
     (dedup=True) heal them exactly (replay rows are byte-identical
     under the frozen routing)."""
-    spark = emb.sparkSession
-    meta = _load_index_meta(spark, path)
-    cents, super_of_cell = meta["cents"], meta["super_of_cell"]
-    if not len(cents):
+    meta = _load_index_meta(emb.sparkSession, path)
+    if not len(meta["cents"]):
         raise ValueError(f"no centroids at {path} — build_ivf_index first")
-    supercents, members = meta["supercents"], None
-    if supercents is not None:
-        members = [
-            np.flatnonzero(super_of_cell == g) for g in range(len(supercents))
-        ]
-    pq_books, pq_rot = meta["books"], None
-    if pq_books is not None and meta["rotated"]:
-        from meerkat_spark.similarity.pq import opq_rotation
-
-        pq_rot = opq_rotation(pq_books.shape[0] * pq_books.shape[2])
-    quantize = "q" in meta["assigned_schema"].fieldNames()
-    bc_route = spark.sparkContext.broadcast(
-        {
-            "cents": cents,
-            "supercents": supercents,
-            "members": members,
-            "pq_books": pq_books,
-            "pq_rot": pq_rot,
-        }
-    )
     c = emb.select(
         F.col(id_col).alias("neighbor_id"), knn._to_double(F.col(vec_col)).alias("cv")
     )
-    try:
-        _assign_and_write(c, path, bc_route, quantize, pq_books is not None, "append")
-    finally:
-        bc_route.destroy()  # single-consumer broadcast, see build
+    _assign_and_write(c, path, meta, "append")
 
 
 def compact_ivf_index(
@@ -664,24 +591,19 @@ def compact_ivf_index(
     construction (frozen routing/encoding), so keeping any one row per
     id is exact; the extra id-keyed shuffle is why it's opt-in —
     ivf_index_stats reports `n_duplicate_rows` to route here."""
-    import shutil
     import uuid
 
-    def count_files(root: str) -> int:
-        return sum(
-            1
-            for dirpath, _dirs, files in os.walk(root)
-            for f in files
-            if f.endswith(".parquet")
-        )
+    from meerkat_spark.ingest.neardup_maintenance import (
+        _parquet_file_count,
+        _swap_in,
+        _sweep_stale_swaps,
+    )
 
     a_dir = os.path.join(path, "assigned")
     # reclaim residue of a crashed swap: a stale fixed-name `.old`
     # (pre-r12) or orphaned `.compact-*` tmp would block / leak
-    from meerkat_spark.ingest.neardup_maintenance import _sweep_stale_swaps
-
     _sweep_stale_swaps(a_dir)
-    before = count_files(a_dir)
+    before = _parquet_file_count(a_dir)
     df = spark.read.parquet(a_dir)
     if dedup:
         df = df.dropDuplicates(["neighbor_id"])
@@ -690,11 +612,8 @@ def compact_ivf_index(
         out = out.sortWithinPartitions("cell_id", "neighbor_id")
     tmp = a_dir + f".compact-{uuid.uuid4().hex[:8]}"
     out.write.mode("overwrite").partitionBy("cell_id").parquet(tmp)
-    old = a_dir + f".old-{uuid.uuid4().hex[:8]}"
-    os.rename(a_dir, old)
-    os.rename(tmp, a_dir)
-    shutil.rmtree(old)
-    return before, count_files(a_dir)
+    _swap_in(tmp, a_dir)
+    return before, _parquet_file_count(a_dir)
 
 
 def rebuild_ivf_index(
@@ -713,12 +632,13 @@ def rebuild_ivf_index(
     - reads the stored float vectors from assigned/ (dropping duplicate
       neighbor_id rows — replayed-extend residue heals for free),
     - re-runs build_ivf_index into a `.rebuild-<uuid>` tmp dir with the
-      SAME index options auto-detected from the live index (two-level
-      routing, SQ8, IVFPQ + OPQ flag) and a fresh sqrt(n) cell count
-      unless `n_cells` pins one,
+      SAME index options, read from the live index's cached metadata
+      (two-level routing, SQ8, IVFPQ sub-quantizer count + OPQ flag),
+      and a fresh sqrt(n) cell count unless `n_cells` pins one,
     - swaps tmp into place with the compaction rename protocol
-      (unique `.old-<uuid>`, crash residue restorable by
-      _sweep_stale_swaps) and drops both dirs' metadata cache entries.
+      (_swap_in: unique `.old-<uuid>`, crash residue restorable by
+      _sweep_stale_swaps) and re-keys the new metadata's cache entry
+      from the tmp dir to `path`.
 
     SEMANTIC CHANGE, BY DESIGN: new centroids move cell boundaries, so
     near-boundary approximate results may differ after a rebuild —
@@ -730,7 +650,7 @@ def rebuild_ivf_index(
     import shutil
     import uuid
 
-    from meerkat_spark.ingest.neardup_maintenance import _sweep_stale_swaps
+    from meerkat_spark.ingest.neardup_maintenance import _swap_in, _sweep_stale_swaps
 
     path = path.rstrip("/")
     # root-level crash residue: restore `path` from the newest
@@ -745,52 +665,35 @@ def rebuild_ivf_index(
                 shutil.rmtree(os.path.join(parent, name), ignore_errors=True)
     a_dir = os.path.join(path, "assigned")
     _sweep_stale_swaps(a_dir)
-    assigned = spark.read.parquet(a_dir)
-    quantize = "q" in assigned.columns
-    has_pq = "codes" in assigned.columns
-    two_level = os.path.isdir(os.path.join(path, "supercentroids"))
-    pq_m = pq_rotate = None
-    if has_pq:
-        books = spark.read.parquet(os.path.join(path, "pq_codebooks"))
-        pq_m = books.select(F.countDistinct("sub_id")).first()[0]
-        pq_rotate = bool(
-            spark.read.parquet(os.path.join(path, "pq_meta")).first()[0]
-        )
-    n_cells_before = spark.read.parquet(
-        os.path.join(path, "centroids")
-    ).count()
-    src = assigned.select(
-        F.col("neighbor_id").alias("vec_id"), F.col("cv").alias("embedding")
-    ).dropDuplicates(["vec_id"])
-    tmp = path.rstrip("/") + f".rebuild-{uuid.uuid4().hex[:8]}"
+    meta = _load_index_meta(spark, path)
+    books = meta["books"]
+    src = (
+        spark.read.schema(meta["assigned_schema"])
+        .parquet(a_dir)
+        .select(F.col("neighbor_id").alias("vec_id"), F.col("cv").alias("embedding"))
+        .dropDuplicates(["vec_id"])
+    )
+    tmp = path + f".rebuild-{uuid.uuid4().hex[:8]}"
     build_ivf_index(
         src,
         tmp,
         n_cells=n_cells,
         train_factor=train_factor,
         n_iter=n_iter,
-        two_level=two_level,
-        quantize=quantize,
-        pq_m=int(pq_m) if pq_m else None,
-        pq_rotate=bool(pq_rotate),
+        two_level=meta["supercents"] is not None,
+        quantize="q" in meta["assigned_schema"].fieldNames(),
+        pq_m=books.shape[0] if books is not None else None,
+        pq_rotate=bool(meta["rotated"]),
     )
-    old = path.rstrip("/") + f".old-{uuid.uuid4().hex[:8]}"
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
-    # both cache keys are stale: `tmp` no longer exists and `path` now
-    # holds different metadata files (the signature would catch it, but
-    # dropping is cheaper than a guaranteed-miss signature walk)
-    _META_CACHE.pop(path, None)
-    _META_CACHE.pop(tmp, None)
-    n_rows = spark.read.parquet(os.path.join(path, "assigned")).count()
-    n_cells_after = spark.read.parquet(
-        os.path.join(path, "centroids")
-    ).count()
+    # the build seeded its metadata under `tmp`; the files keep their
+    # names, sizes and mtimes through the rename, so it serves `path`
+    new = _META_CACHE.pop(tmp)[1]
+    _swap_in(tmp, path)
+    _seed_meta_cache(path, new)
     return {
-        "n_rows": int(n_rows),
-        "n_cells_before": int(n_cells_before),
-        "n_cells_after": int(n_cells_after),
+        "n_rows": spark.read.schema(new["assigned_schema"]).parquet(a_dir).count(),
+        "n_cells_before": len(meta["cents"]),
+        "n_cells_after": len(new["cents"]),
     }
 
 
@@ -952,8 +855,11 @@ def ivf_search(
     vec_col: str = "embedding",
     refine: int | None = None,
 ) -> DataFrame:
-    """Top-k over a persisted IVF index. The scan reads only the probed
-    cells' `cell_id=` directories, with the `assigned` schema from the
+    """Top-k over a persisted IVF index. Each query probes the n_probe
+    cells knn._route returns for it — its home cell first, the cell the
+    build wrote an identical vector to — so an exact copy of an indexed
+    vector is found at any n_probe, flat or two-level. The scan reads
+    only the probed cells' `cell_id=` directories, with the `assigned` schema from the
     cached index metadata, so only n_probe/n_cells of the corpus is
     read and no listing or schema-inference job runs; the probed
     cell_ids also stay in the plan as partition filters — the plan
@@ -1018,28 +924,9 @@ def ivf_search(
                 )
                 out = res if out is None else out.unionByName(res)
             return out
-    Qn = Q / np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-12)
-    if meta["supercents"] is not None:
-        # Two-level index: probe selection MUST mirror the build routing
-        # (super argmax -> cell argmax within that super) so identical
-        # vectors meet in the same cell. Probe the top n_probe
-        # superclusters, then the best n_probe cells among their members.
-        supercents = meta["supercents"]
-        s_probe = min(n_probe, len(supercents))
-        top_sup = np.argsort(-(Qn @ supercents.T), axis=1)[:, :s_probe]
-        rows = []
-        for i in range(len(Qn)):
-            mem = np.flatnonzero(np.isin(super_of_cell, top_sup[i]))
-            if not len(mem):  # probed superclusters lost all cells in training
-                mem = np.arange(len(cents))
-            order = mem[np.argsort(-(Qn[i] @ cents[mem].T))][:n_probe]
-            rows.append(order)
-        top_cells = np.stack(
-            [np.pad(r, (0, n_probe - len(r)), constant_values=r[0]) for r in rows]
-        )
-    else:
-        top_cells = np.argsort(-(Qn @ cents.T), axis=1)[:, :n_probe]
-    probed = sorted({int(c) for row in top_cells for c in row})
+    Qn = knn._unit(Q)
+    top_cells = knn._route(Qn, cents, n_probe, meta["supercents"], super_of_cell)
+    probed = np.unique(top_cells).tolist()
     # Read ONLY the probed cells' directories, with the cached schema:
     # a whole-table read lists every cell_id= dir (above Spark's
     # 32-path threshold that is a distributed listing job) and infers
@@ -1066,8 +953,8 @@ def ivf_search(
         .filter(sql_in("cell_id", probed))
     )
 
-    # distinct (query, cell) probes — the two-level path PADS short
-    # cell lists by repeating the first cell, and a duplicate probe row
+    # distinct (query, cell) probes — _route PADS a two-level row with
+    # fewer candidate cells by repeating its home cell, and a duplicate probe row
     # would duplicate every candidate pair downstream. With unique
     # probes, each corpus vector lives in exactly ONE cell partition,
     # so the cell equi-joins below emit each (query, neighbor) pair at

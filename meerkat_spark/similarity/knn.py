@@ -21,6 +21,8 @@ Scale design:
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window as W
@@ -29,6 +31,11 @@ from pyspark.sql import functions as F
 
 def _to_double(arr):
     return F.transform(arr, lambda x: x.cast("double"))
+
+
+def _unit(X: "np.ndarray") -> "np.ndarray":
+    """Rows of X scaled to unit L2 norm (all-zero rows stay zero)."""
+    return X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
 
 
 def dot(a, b):
@@ -471,8 +478,7 @@ def _train_centroids_from_matrix(
     and PQ trainers. Rows must be the n_cells*train_factor prefix of
     the xxhash64(id)-ordered corpus — exactly what the collect in
     _train_centroids_sample produces."""
-    Xn = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
-    return _spherical_kmeans(Xn, n_cells, n_iter)
+    return _spherical_kmeans(_unit(X), n_cells, n_iter)
 
 
 def _train_centroids_hierarchical(
@@ -539,8 +545,7 @@ def _train_centroids_hierarchical(
         for pdf in batches:
             if not len(pdf):
                 continue
-            X = np.stack(pdf["cv"].to_numpy()).astype(np.float64)
-            Xn = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
+            Xn = _unit(np.stack(pdf["cv"].to_numpy()).astype(np.float64))
             out = pdf[["hk", "cv"]].copy()
             out["super_id"] = (Xn @ supercents.T).argmax(axis=1).astype("int64")
             yield out
@@ -553,8 +558,7 @@ def _train_centroids_hierarchical(
         if k == 0:
             return pd.DataFrame({"super_id": [], "local_id": [], "centroid": []})
         pdf = pdf.sort_values("hk", kind="mergesort")  # deterministic init
-        X = np.stack(pdf["cv"].to_numpy()).astype(np.float64)
-        Xn = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
+        Xn = _unit(np.stack(pdf["cv"].to_numpy()).astype(np.float64))
         cents = _spherical_kmeans(Xn, k, n_iter)
         return pd.DataFrame(
             {
@@ -572,6 +576,73 @@ def _train_centroids_hierarchical(
     _LAST_TRAIN_COLLECTS.append(("hier_centroids", len(cent_rows)))
     cent_rows = sorted(cent_rows, key=lambda r: (r.super_id, r.local_id))
     return np.stack([np.asarray(r.centroid, dtype=np.float64) for r in cent_rows])
+
+
+# Scores this close to a row's best are re-scored exactly (see _ranked).
+_NEAR_TIE = 1e-9
+
+
+def _ranked(Xn: "np.ndarray", M: "np.ndarray", take: int) -> "np.ndarray":
+    """(rows, take) ids of M's rows by descending Xn·M score; exact ties
+    keep the lower id. Column 0 is re-decided over every score within
+    _NEAR_TIE of the row's best with math.fsum (exactly rounded), so it
+    does not depend on how many rows one matmul scored."""
+    S = Xn @ M.T
+    if take == 1:
+        top = S.argmax(axis=1)[:, None]
+    else:
+        top = np.argsort(-S, axis=1, kind="stable")[:, :take]
+    best = S[np.arange(len(S)), top[:, 0]]
+    near = S >= (best - _NEAR_TIE)[:, None]
+    # all-zero rows score 0 everywhere; they keep the lowest id
+    for i in np.flatnonzero((near.sum(axis=1) > 1) & Xn.any(axis=1)):
+        cand = np.flatnonzero(near[i])
+        home = cand[int(np.argmax([math.fsum(Xn[i] * M[j]) for j in cand]))]
+        top[i] = ([home] + [j for j in top[i] if j != home])[:take]
+    return top
+
+
+def _route(
+    Xn: "np.ndarray",
+    cents: "np.ndarray",
+    n_probe: int = 1,
+    supercents: "np.ndarray | None" = None,
+    super_of_cell: "np.ndarray | None" = None,
+) -> "np.ndarray":
+    """The one IVF routing function: each unit-norm row's cells, best
+    first, as an int64 (rows, min(n_probe, n_cells)) array. Column 0 is
+    the row's HOME cell: builds and extends write the row there, and
+    every search probes it first, so an exact copy of an indexed vector
+    always reaches its source's cell.
+
+    - Ties go to the lowest cell id (stable order).
+    - Scores within _NEAR_TIE of a row's best are re-scored with an
+      exactly rounded dot product (math.fsum), so column 0 is the same
+      whether the row is routed alone or inside a batch of any size
+      (BLAS gemm and gemv may differ in the last ulp).
+    - Two-level (supercents given): column 0 is the best supercluster's
+      best member cell. The other columns are the next-best cells among
+      the members of the n_probe best superclusters, excluding column
+      0; a row with fewer such cells is padded with column 0.
+    - n_probe is clamped to the cell count."""
+    n_probe = max(1, min(int(n_probe), len(cents)))
+    if supercents is None:
+        return _ranked(Xn, cents, n_probe)
+    sup = _ranked(Xn, supercents, min(n_probe, len(supercents)))
+    home = np.empty(len(Xn), dtype=np.int64)
+    for g in np.unique(sup[:, 0]):
+        # rows of supercluster g compete only among g's member cells:
+        # |rows| x |members| matmul, ~n/n_super x n_cells/n_super
+        idx = np.flatnonzero(sup[:, 0] == g)
+        mem = np.flatnonzero(super_of_cell == g)
+        home[idx] = mem[_ranked(Xn[idx], cents[mem], 1)[:, 0]]
+    out = np.repeat(home[:, None], n_probe, axis=1)
+    for i in range(len(Xn) if n_probe > 1 else 0):
+        mem = np.flatnonzero(np.isin(super_of_cell, sup[i]))
+        mem = mem[mem != home[i]]
+        rest = mem[np.argsort(-(cents[mem] @ Xn[i]), kind="stable")][: n_probe - 1]
+        out[i, 1 : 1 + len(rest)] = rest
+    return out
 
 
 def ivf_candidates(
@@ -592,8 +663,9 @@ def ivf_candidates(
     deterministic sample (driver-side numpy — the FAISS coarse-quantizer
     recipe), corpus assigned to its nearest cell with ONE shuffle-free
     Arrow matmul pass (centroid matrix ships in the UDF closure, ~KB),
-    queries probe their n_probe nearest cells, exact cosine rerank
-    inside the probed cells.
+    queries probe their n_probe nearest cells (both placed by _route,
+    the persisted index's routing), exact cosine rerank inside the
+    probed cells.
 
     At 100 TB: training cost is constant (sample-bounded); assignment
     is a narrow row-local projection (no crossJoin, no per-row window —
@@ -607,10 +679,8 @@ def ivf_candidates(
 
     def assign_cells(batches):
         for pdf in batches:
-            C = np.stack(pdf["cv"].to_numpy()).astype(np.float64)
-            Cn = C / np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-12)
             pdf = pdf[["neighbor_id", "cv"]].copy()
-            pdf["cell_id"] = (Cn @ cents.T).argmax(axis=1).astype("int64")
+            pdf["cell_id"] = _route(_unit(np.stack(pdf["cv"].to_numpy())), cents)[:, 0]
             yield pdf
 
     assigned = c.mapInPandas(
@@ -623,11 +693,9 @@ def ivf_candidates(
 
     def probe_cells(batches):
         for pdf in batches:
-            Q = np.stack(pdf["qv"].to_numpy()).astype(np.float64)
-            Qn = Q / np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-12)
-            top = np.argsort(-(Qn @ cents.T), axis=1)[:, :n_probe]
-            out = pdf.loc[pdf.index.repeat(n_probe), ["query_id", "qv"]].copy()
-            out["cell_id"] = top.reshape(-1).astype("int64")
+            top = _route(_unit(np.stack(pdf["qv"].to_numpy())), cents, n_probe)
+            out = pdf.loc[pdf.index.repeat(top.shape[1]), ["query_id", "qv"]].copy()
+            out["cell_id"] = top.reshape(-1)
             yield out
 
     q_cells = q.mapInPandas(

@@ -7,6 +7,7 @@ from __future__ import annotations
 import os
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from meerkat_spark.similarity import knn
@@ -825,3 +826,77 @@ def test_warm_search_launches_no_listing_job(spark, tmp_path):
             extra = calls[len(query_collect):]
             assert calls[: len(query_collect)] == query_collect, (name, calls)
             assert extra and all("ivf_index.py" in c for c in extra), (name, calls)
+
+
+# --- one routing function: knn._route places every vector ------------
+
+
+@pytest.mark.parametrize("two_level", [False, True], ids=["flat", "two_level"])
+def test_exact_copy_found_at_every_n_probe(spark, tmp_path, two_level):
+    """Every exact-copy query of a 2,000-vector clustered corpus gets
+    its source at rank 1 with sim 1.0, at n_probe 1, 2 and 3, flat and
+    two-level: the build writes a vector to column 0 of knn._route and
+    every search probes that cell first. A two-level search that ranked
+    the union of its probed superclusters' cells could drop that cell
+    (seed 1 missed 61 copies at n_probe=2)."""
+    from meerkat_spark.similarity.ivf_index import _arrow_df
+
+    rng = np.random.default_rng(1)
+    centers = rng.normal(size=(30, 16))
+    X = centers[rng.integers(0, 30, 2000)] + 0.3 * rng.normal(size=(2000, 16))
+    ids = np.arange(len(X), dtype=np.int64)
+    ddl = "vec_id long, embedding array<double>"
+    corpus = _arrow_df(spark, ddl, {"vec_id": ids, "embedding": X})
+    copies = _arrow_df(spark, ddl, {"vec_id": ids + 1_000_000, "embedding": X})
+    idx = str(tmp_path / "ivf_copies")
+    build_ivf_index(corpus, idx, n_cells=64, two_level=two_level)
+    for n_probe in (1, 2, 3):
+        top1 = {
+            r.query_id: r
+            for r in ivf_search(spark, idx, copies, k=1, n_probe=n_probe).collect()
+        }
+        missed = [
+            q for q in (ids + 1_000_000).tolist()
+            if q not in top1
+            or top1[q].neighbor_id != q - 1_000_000
+            or top1[q].sim != 1.0
+        ]
+        assert not missed, (n_probe, len(missed), missed[:5])
+
+
+def test_route_ties_batches_and_probe_clamp():
+    """knn._route's contract on its own: an exact tie goes to the lowest
+    cell id; column 0 of a row routed alone equals that row's column 0
+    inside the whole batch, on centroids with exact and near-duplicates
+    (BLAS gemv and gemm may round differently); n_probe above the cell
+    count returns every cell, flat and two-level."""
+    from meerkat_spark.similarity.ivf_index import _cluster_centroids
+
+    e = np.eye(3)
+    tied = knn._unit(np.array([e[0], e[1], e[1], e[2], e[1]]))
+    assert knn._route(e[1:2], tied)[0, 0] == 1
+    assert knn._route(e[1:2], tied, n_probe=3)[0].tolist() == [1, 2, 4]
+    many = np.tile(e[[1, 0, 2]], (22, 1))[:64]  # cells 0, 3, ..., 63 tie
+    assert knn._route(e[1:2], many, n_probe=22)[0].tolist() == list(range(0, 64, 3))
+
+    rng = np.random.default_rng(16)
+    base = rng.normal(size=(6, 24))
+    cents = knn._unit(np.concatenate([
+        base,
+        base[:3],  # exact duplicates of cells 0-2
+        base[3:] + 1e-13 * rng.normal(size=(3, 24)),  # near-duplicates
+    ]))
+    X = knn._unit(np.concatenate([
+        np.repeat(base, 40, axis=0) + 1e-9 * rng.normal(size=(240, 24)),
+        rng.normal(size=(200, 24)),
+    ]))
+    supercents, super_of_cell = _cluster_centroids(cents, 3)
+    for two in (None, (supercents, super_of_cell)):
+        kw = {} if two is None else {"supercents": two[0], "super_of_cell": two[1]}
+        whole = knn._route(X, cents, 1, **kw)[:, 0]
+        alone = [knn._route(X[i : i + 1], cents, 1, **kw)[0, 0] for i in range(len(X))]
+        assert whole.tolist() == alone
+        assert (knn._route(X, cents, 3, **kw)[:, 0] == whole).all()
+
+        every = knn._route(X[:5], cents, n_probe=len(cents) + 7, **kw)
+        assert all(sorted(row) == list(range(len(cents))) for row in every.tolist())

@@ -72,6 +72,8 @@ def test_ivf_recall_vs_brute_force(spark, emb):
     recalls = [len(exact[qid] & approx.get(qid, set())) / 5 for qid in exact]
     mean_recall = sum(recalls) / len(recalls)
     assert mean_recall >= 0.3, f"IVF recall too low: {recalls}"
+    # n_probe above the cell count probes every cell: exact, no crash
+    assert _topk_sets(knn.ivf_topk(emb, q, k=5, n_cells=4, n_probe=6)) == exact
 
 
 def test_vectorized_equals_exact_topk(spark, emb):

@@ -636,8 +636,10 @@ def _route(
         idx = np.flatnonzero(sup[:, 0] == g)
         mem = np.flatnonzero(super_of_cell == g)
         home[idx] = mem[_ranked(Xn[idx], cents[mem], 1)[:, 0]]
+    if n_probe == 1:
+        return home[:, None]
     out = np.repeat(home[:, None], n_probe, axis=1)
-    for i in range(len(Xn) if n_probe > 1 else 0):
+    for i in range(len(Xn)):
         mem = np.flatnonzero(np.isin(super_of_cell, sup[i]))
         mem = mem[mem != home[i]]
         rest = mem[np.argsort(-(cents[mem] @ Xn[i]), kind="stable")][: n_probe - 1]

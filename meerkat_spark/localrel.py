@@ -50,13 +50,13 @@ def sql_in(col_name: str, values) -> Column:
     """``col IN (v1, v2, …)`` over a driver-resident value list in ONE
     py4j round trip. ``Column.isin`` builds one JVM literal PER ELEMENT
     (~0.8 ms of socket round trip each — 2.0 s of the 4.0 s
-    ivf_quantized search construction at the 10k-id rerank cap,
-    measured via cProfile: 2162 ``_create_column_from_literal`` calls);
-    rendering the identical ``In`` predicate as a SQL string lets the
-    JVM parse every literal in one call. The Catalyst plan — and
-    therefore the Parquet row-group pushdown the rerank paths rely on —
-    is exactly what ``isin`` produces. Integer and string values only;
-    an empty list is ``lit(False)`` like an empty ``In``."""
+    ivf_quantized search construction when its rerank filtered on a
+    2,162-id list, measured via cProfile); rendering the identical
+    ``In`` predicate as a SQL string lets the JVM parse every literal
+    in one call. The Catalyst plan — and therefore the partition
+    pruning the IVF search's cell filter relies on — is exactly what
+    ``isin`` produces. Integer and string values only; an empty list is
+    ``lit(False)`` like an empty ``In``."""
     vals = list(values)
     if not vals:
         return F.lit(False)

@@ -34,23 +34,6 @@ from pyspark.sql import types as T
 from meerkat_spark.localrel import local_df, sql_in
 from meerkat_spark.similarity import knn
 
-# Below this many DISTINCT candidate ids the quantized/PQ rerank keeps
-# the literal `isin` pushdown (it reaches the Parquet scan, where the
-# in-partition neighbor_id sort lets row-group stats prune); above it
-# the literal form is a plan-size hazard (a multi-million-literal
-# Catalyst `In` at the queries_to_pdf cap — ADVICE r10 medium / VERDICT
-# r10 'what's wrong' #1), so the rerank switches to a broadcast
-# semi-join on the already-checkpointed candidate table — identical
-# semantics, no plan bloat. Same threshold as the KQL translator's
-# in()-subquery routing (kql/translator.py _IN_LITERAL_MAX).
-# Task-binary note (r11, measured at sf0.1): the rerank job's ~1-2 MiB
-# task binaries are dominated by the serialized scan+join plan and are
-# present on BOTH sides of this gate (the 2,115-literal In and the
-# semi-join variant ship within ~1 MiB of each other), so the gate is
-# sized for plan-construction safety, not binary size; bench pins the
-# DAGScheduler logger accordingly.
-RERANK_LITERAL_MAX = 10_000
-
 
 def _cluster_centroids(cents: np.ndarray, n_super: int, n_iter: int = 10):
     """Group the n_cells centroids into n_super superclusters (spherical
@@ -162,10 +145,6 @@ def _assign_and_write(c: DataFrame, path: str, meta: dict, mode: str) -> None:
     # (Append mode adds ONE file per touched cell per batch — compact
     # with rebuild when batch count grows large.)
     assigned = assigned.repartition("cell_id")
-    if quantize or has_pq:
-        # neighbor_id order inside each cell file ⇒ Parquet row-group
-        # min/max stats make the rerank's neighbor_id pushdown prune
-        assigned = assigned.sortWithinPartitions("cell_id", "neighbor_id")
     try:
         assigned.write.mode(mode).partitionBy("cell_id").parquet(
             os.path.join(path, "assigned")
@@ -250,13 +229,11 @@ def build_ivf_index(
 
     `quantize=True` additionally stores int8 codes (`q`, array<tinyint>
     — the symmetric per-vector scheme of similarity/quantize.py, scale
-    = max|v|/127) and `q_scale` beside the float vectors, and sorts
-    rows by neighbor_id inside each cell partition. Search then scores
-    candidates against ONLY the 1-byte `q` column (cosine is
+    = max|v|/127) and `q_scale` beside the float vectors. Search then
+    scores candidates against ONLY the 1-byte `q` column (cosine is
     scale-invariant, so not even q_scale is read — 8x less scoring IO
-    per probe than the float column) and reranks a small refined set in
-    float via a neighbor_id-pushdown read that Parquet row-group stats
-    can prune because of the in-partition sort.
+    per probe than the float column) and reranks the refined set in
+    float against the probed cells' `cv` rows.
 
     `pq_m=m` builds the IVFPQ composition instead (the FAISS
     billion-scale shape): per-subspace PQ codebooks train on a bounded
@@ -578,10 +555,8 @@ def compact_ivf_index(
     """Small-file maintenance after extend_ivf_index appends: each
     append adds one file per touched cell, so after B batches a probe
     opens B files per probed cell. Rewrites the assigned table back to
-    one file per cell — re-applying the in-partition neighbor_id sort
-    that quantized/PQ rerank row-group pruning depends on (append
-    interleaves sorted runs, which widens row-group min/max stats) —
-    and swaps it in atomically. Returns (files_before, files_after).
+    one file per cell and swaps it in atomically. Returns
+    (files_before, files_after).
 
     `dedup=True` additionally drops duplicate neighbor_id rows — the
     healing pass for a REPLAYED extend_ivf_index batch (extend is a
@@ -608,8 +583,6 @@ def compact_ivf_index(
     if dedup:
         df = df.dropDuplicates(["neighbor_id"])
     out = df.repartition("cell_id")
-    if "q" in df.columns or "codes" in df.columns:
-        out = out.sortWithinPartitions("cell_id", "neighbor_id")
     tmp = a_dir + f".compact-{uuid.uuid4().hex[:8]}"
     out.write.mode("overwrite").partitionBy("cell_id").parquet(tmp)
     _swap_in(tmp, a_dir)
@@ -873,9 +846,15 @@ def ivf_search(
     scale-invariant, so the codes rank like the floats up to
     quantization noise — ~8x less scoring IO), keep the top `refine`
     (default max(8k, 32)) per query, then rerank exactly those rows in
-    float. Exact duplicates quantize to identical codes and hit the
-    quantized-cosine ceiling of 1.0, so the exact-dup recall contract
-    survives quantization (ivf_quantized_recall pins it).
+    float. PQ indexes do the same with ADC scores over the code column.
+    The rerank takes one path at every size: the candidate pairs
+    (at most n_queries * refine) are collected to the driver, given
+    their query vectors, and broadcast-joined on neighbor_id against
+    the probed cells' float rows. Exact duplicates quantize to
+    identical codes and hit the quantized-cosine ceiling of 1.0, so the
+    exact-dup recall contract survives quantization
+    (ivf_quantized_recall pins it). Query ids must be unique
+    (knn.queries_to_pdf rejects duplicates).
 
     Recall/cost knob: with the sqrt(corpus) build default, a FIXED
     n_probe reads a shrinking fraction of the corpus as it grows
@@ -1049,81 +1028,34 @@ def ivf_search(
             .filter(F.col("rq") <= refine_n)
             .select("query_id", "neighbor_id")
         )
-        if len(q_pdf) * refine_n <= RERANK_LITERAL_MAX:
-            # small-refine fast path (r16): the candidate table is
-            # PROVABLY bounded by n_queries * refine_n pairs, so one
-            # bounded collect replaces the eager localCheckpoint + the
-            # limit(N+1) id probe — one Spark job instead of two — and
-            # the rerank pair table (query vector attached) is built
-            # driver-side from arrays already in hand (Q), then
-            # broadcast. The literal isin keeps the row-group-prunable
-            # neighbor_id pushdown into the float read.
-            pair_rows = cand_topk.collect()
-            if is_pq:
-                bc_lut.destroy()  # coarse pass consumed by the collect
-            pair_q = np.array([r.query_id for r in pair_rows], dtype=np.int64)
-            pair_n = np.array([r.neighbor_id for r in pair_rows], dtype=np.int64)
-            pos = {q: i for i, q in enumerate(q_ids.tolist())}
-            cand_ids = np.unique(pair_n).tolist()
-            rerank = _arrow_df(
-                spark,
-                "query_id long, neighbor_id long, qv array<double>",
-                {
-                    "query_id": pair_q,
-                    "neighbor_id": pair_n,
-                    "qv": Q[[pos[q] for q in pair_q.tolist()]],
-                },
-            )
-            floats = assigned.filter(sql_in("neighbor_id", cand_ids)).select(
-                "neighbor_id", "cv"
-            )
-            sims = floats.join(F.broadcast(rerank), "neighbor_id").select(
+        # The rq filter bounds the candidates at n_queries * refine_n
+        # pairs, so they are collected. After the collect the coarse
+        # pass is done, and the PQ LUT broadcast (up to ~128 MB) is
+        # freed before an auto-split's next chunk builds its own. The
+        # rerank table attaches each pair's query vector from Q and is
+        # broadcast against the probed cells' float rows.
+        pairs = cand_topk.toArrow()
+        if is_pq:
+            bc_lut.destroy()
+        pair_q = pairs.column("query_id").to_numpy()
+        rerank = _arrow_df(
+            spark,
+            "query_id long, neighbor_id long, qv array<double>",
+            {
+                "query_id": pair_q,
+                "neighbor_id": pairs.column("neighbor_id").to_numpy(),
+                "qv": Q[pd.Index(q_ids).get_indexer(pair_q)],
+            },
+        )
+        sims = (
+            assigned.select("neighbor_id", "cv")
+            .join(F.broadcast(rerank), "neighbor_id")
+            .select(
                 "query_id",
                 "neighbor_id",
                 knn.cosine(F.col("qv"), F.col("cv")).alias("sim"),
             )
-        else:
-            # large-refine path: materialize the candidate table ONCE —
-            # both consumers below (the id probe and the broadcast
-            # rerank join) would otherwise each re-execute the whole
-            # coarse scoring scan
-            cand = cand_topk.localCheckpoint(eager=True)
-            if is_pq:
-                # the eager checkpoint above fully consumed the ADC
-                # pass — the float rerank never touches the LUT, so
-                # free the (up to ~128 MB) broadcast now instead of
-                # leaking one block per search call (ADVICE r11)
-                bc_lut.destroy()
-            # size-gated pushdown: probe the distinct candidate-id
-            # count with a bounded limit(N+1) collect (cheap — cand is
-            # already checkpointed). Small sets keep the literal isin,
-            # which pushes into the float read where the in-partition
-            # neighbor_id sort lets Parquet row-group stats skip
-            # non-candidate groups; large sets (up to n_queries *
-            # refine_n ≈ 2.6M at the caps) would blow up the driver
-            # plan as one giant Catalyst `In`, so they rerank via a
-            # broadcast semi-join on the checkpointed cand table
-            # instead — the id set is ≤ a few MB of longs, and the
-            # scan still prunes to the probed cell partitions.
-            cand_ids_df = cand.select("neighbor_id").distinct()
-            probe_ids = cand_ids_df.limit(RERANK_LITERAL_MAX + 1).collect()
-            if len(probe_ids) <= RERANK_LITERAL_MAX:
-                cand_ids = [r.neighbor_id for r in probe_ids]
-                floats = assigned.filter(
-                    sql_in("neighbor_id", cand_ids)
-                ).select("neighbor_id", "cv")
-            else:
-                floats = assigned.select("neighbor_id", "cv").join(
-                    F.broadcast(cand_ids_df), "neighbor_id", "left_semi"
-                )
-            q_vecs = q_cells.select("query_id", "qv").dropDuplicates(["query_id"])
-            sims = floats.join(
-                F.broadcast(cand.join(q_vecs, "query_id")), "neighbor_id"
-            ).select(
-                "query_id",
-                "neighbor_id",
-                knn.cosine(F.col("qv"), F.col("cv")).alias("sim"),
-            )
+        )
     else:
         sims = (
             assigned.join(F.broadcast(q_cells), "cell_id")

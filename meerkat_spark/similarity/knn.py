@@ -211,7 +211,10 @@ def queries_to_pdf(
     HARD bound: reads at most max_rows+1 rows (limit pushes into the
     scan) and raises instead of collecting a corpus-sized DataFrame —
     the guard that keeps 'broadcast the small query side' honest when a
-    caller misconfigures the query filter."""
+    caller misconfigures the query filter. Query ids must be unique:
+    every search keys its per-query ranking and its query vectors by
+    id, so two queries sharing one would merge into one top-k holding
+    each neighbor twice — a duplicate raises instead."""
     pdf = (
         queries.select(
             F.col(id_col).alias("query_id"), _to_double(F.col(vec_col)).alias("qv")
@@ -224,6 +227,12 @@ def queries_to_pdf(
             f"query set exceeds max_rows={max_rows}; brute-force scoring "
             "broadcasts queries to every task — pass a smaller query set "
             "or raise max_rows explicitly"
+        )
+    dup = pdf["query_id"][pdf["query_id"].duplicated()]
+    if len(dup):
+        raise ValueError(
+            f"duplicate query id {dup.iloc[0]}: each query needs its own "
+            f"{id_col} value, or the searches merge their top-k lists"
         )
     return pdf
 
@@ -411,12 +420,18 @@ _LAST_TRAIN_COLLECTS: list[tuple[str, int]] = []
 
 
 def _spherical_kmeans(Xn: "np.ndarray", k: int, n_iter: int) -> "np.ndarray":
-    """Spherical k-means on L2-normalized rows; init = first k rows
-    (callers pass hash-ordered data, so this is a deterministic
-    pseudo-random init). Runs wherever the rows already live — driver
-    for the bounded flat sample, executor for the hierarchical
-    per-supercluster subsets."""
-    cents = Xn[: min(k, len(Xn))].copy()
+    """Spherical k-means on L2-normalized rows; init = the first k
+    DISTINCT rows (callers pass hash-ordered data, so this is a
+    deterministic pseudo-random init). Identical seeds would give
+    identical centroids that never separate, wasting all but one of
+    their cells, so repeated rows seed only once there are fewer than k
+    distinct ones. Runs wherever the rows already live — driver for the
+    bounded flat sample, executor for the hierarchical per-supercluster
+    subsets."""
+    first = np.zeros(len(Xn), dtype=bool)
+    first[np.unique(Xn, axis=0, return_index=True)[1]] = True
+    init = np.concatenate([np.flatnonzero(first), np.flatnonzero(~first)])
+    cents = Xn[init[:k]]
     for _ in range(n_iter):
         assign = (Xn @ cents.T).argmax(axis=1)
         # stable argsort + contiguous-run gather instead of one boolean

@@ -163,8 +163,9 @@ def knn_cosine_topk_fast(spark, sf_dir):
     twin as knn_cosine_topk: BLAS pairwise summation differs from the
     sequential fold only at ~1e-15 relative, invisible under the
     6-dp projection, and the fixture's rank-5/rank-6 similarity gaps
-    are >= 2e-4 — four orders above float noise — so the top-k SET and
-    ranks are stable across both engines (bit-level equivalence to the
+    (self excluded) are >= 1.95e-4 at sf0.01 and >= 2.19e-4 at sf0.1 —
+    far above that noise — so the top-k SET and ranks are stable
+    across both engines (bit-level equivalence to the
     fold variant also asserted in tests/test_similarity.py)."""
     emb = _emb(spark, sf_dir)
     q_pdf = knn.queries_to_pdf(emb.filter(F.col("vec_id") < N_QUERIES))
@@ -218,8 +219,8 @@ def knn_lsh_recall_envelope(spark, sf_dir):
     # exact twin via the vectorized Arrow-matmul kernel (r16): the
     # interpreted zip_with/aggregate fold is the ORACLE-parity kernel
     # for sim VALUES, but this envelope grades only the membership of
-    # the top-5 SET (the fixture's rank-5/rank-6 gaps are >= 2e-4,
-    # four orders above BLAS-vs-fold float noise — the
+    # the top-5 SET (the fixture's rank-5/rank-6 gaps are >= 1.95e-4,
+    # far above BLAS-vs-fold float noise — the
     # knn_cosine_topk_fast equivalence argument), so the ~100x-cheaper
     # kernel computes the identical set.
     exact = knn.brute_force_topk_vectorized(
@@ -252,7 +253,7 @@ def knn_ivf_recall_envelope(spark, sf_dir):
     emb = _emb(spark, sf_dir)
     queries = emb.filter(F.col("vec_id") < N_QUERIES)
     # vectorized exact twin — see knn_lsh_recall_envelope (set-stable
-    # vs the fold kernel on this fixture's >= 2e-4 rank gaps)
+    # vs the fold kernel on this fixture's >= 1.95e-4 rank gaps)
     exact = knn.brute_force_topk_vectorized(
         emb, knn.queries_to_pdf(queries), k=TOP_K
     ).select("query_id", "neighbor_id")
@@ -647,7 +648,7 @@ def ivf_quantized_recall(spark, sf_dir):
     ivf_persisted_recall, but the assigned table stores int8 codes +
     scale beside the floats and search scores candidates against ONLY
     the 1-byte code column (cosine is scale-invariant), reranking the
-    refined set in float via a row-group-prunable neighbor_id pushdown.
+    refined set in float against the probed cells' float rows.
     Exact duplicates quantize to identical codes (same max|v|/127 scale,
     same half-up rounding), hit the quantized-cosine ceiling of 1.0, and
     therefore always survive the coarse cut — so the float rerank must

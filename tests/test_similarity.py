@@ -194,6 +194,48 @@ def test_query_collection_guard(spark, emb):
         knn.brute_force_topk_vectorized(emb, pdf, k=3, max_queries=4)
 
 
+def test_duplicate_query_ids_rejected(spark, emb, tmp_path):
+    """Two queries sharing an id would merge into one top-k holding each
+    neighbor twice; queries_to_pdf, which every driver-side search reads
+    its queries through, raises instead and names the id."""
+    from meerkat_spark.similarity.ivf_index import build_ivf_index, ivf_search
+
+    idx = str(tmp_path / "ivf")
+    build_ivf_index(emb, idx, n_cells=4)
+    twin = emb.filter(F.col("vec_id") == 5).withColumn(
+        "vec_id", F.lit(10_000_000).cast("long")
+    )
+    queries = twin.unionByName(twin)
+    with pytest.raises(ValueError, match="duplicate query id 10000000"):
+        ivf_search(spark, idx, queries, k=2, n_probe=1)
+    with pytest.raises(ValueError, match="duplicate query id 10000000"):
+        knn.brute_force_topk_vectorized(emb, knn.queries_to_pdf(queries), k=2)
+
+
+@pytest.mark.parametrize("sf", ["sf0.01", "sf0.1"])
+def test_ann_fixture_rank_gap(sf):
+    """The suite's ANN oracles compare top-5 sets computed by different
+    kernels (BLAS matmul vs sequential fold), which is safe only while
+    every probe query's rank-5/rank-6 cosine gap, self excluded, stays
+    far above float noise. The minima are 1.954e-4 at sf0.01 (query 4)
+    and 2.188e-4 at sf0.1 (query 5); pin them at >= 1e-4."""
+    import os
+
+    import numpy as np
+    import pyarrow.parquet as papq
+
+    t = papq.read_table(f"{os.path.dirname(SF)}/{sf}/embeddings.parquet")
+    ids = t.column("vec_id").to_numpy()
+    Xn = knn._unit(
+        np.stack(t.column("embedding").to_numpy(zero_copy_only=False)).astype(np.float64)
+    )
+    gaps = []
+    for q in range(8):
+        sims = np.sort(Xn[ids != q] @ Xn[ids == q][0])[::-1]
+        gaps.append(sims[4] - sims[5])
+    assert min(gaps) >= 1e-4, gaps
+
+
 def test_lsh_code_rejects_over_63_planes():
     import pytest as _pytest
 
